@@ -789,7 +789,8 @@ def pq_topk(
         # dense re-index invariant from pq_pack_codebook (codes are the
         # positions of sid-ascending seeds) — the literal path relies on
         # the transform index REPLACING the stored j.
-        assert [c["j"] for c in sub_cb] == list(range(len(sub_cb)))
+        if [c["j"] for c in sub_cb] != list(range(len(sub_cb))):
+            raise ValueError("pq codebook codes are not position-dense")
     cb_rows = [[list(c["cvec"]) for c in sub_cb] for sub_cb in packed]
     cb_lits = [_cb_literal(sub_cb) for sub_cb in cb_rows]
     # The encoded corpus is MATERIALIZED before the query cross (round 11):

@@ -83,9 +83,11 @@ def rebuild(
     t["vw_project_access_requests"] = steps.project_access_requests_view(
         t["AccessRequest"], vp
     )
-    vp = steps.fill_missing_country(vp, res, t["Country"])
+    # scores read only the project keys, which the country fill leaves
+    # alone, so they join the lineage from before it
     t["EvaluationScore"] = steps.aggregate_evaluation_scores(
         vp, sources["NHM_Application_Scores"]
     )
+    vp = steps.fill_missing_country(vp, res, t["Country"])
     t["VisitorProject"] = vp.drop("synth_round")
     return t, ctx

@@ -538,61 +538,64 @@ def fill_missing_country(
     lowercase name/alt-name match, else first delimiter split (', ', ' - ',
     '. ') whose prefix matches; ambiguity resolved by single-country check
     then max population (W3). The per-row scan over ~25k cities becomes one
-    precomputed name index + equi-joins."""
+    equi-join against a precomputed name index.
+
+    Each todo row carries its four stage-tagged lookup keys (stage 0 exact,
+    stages 1-3 the splits, NULL when the town does not split), so the
+    VisitorProject lineage is read once and joined to the name index once.
+    Each stage picks its most populous candidate; the lowest stage whose
+    pick has a country code wins, so a pick without a code falls through to
+    the next stage."""
     todo = visitor_project.filter(
         F.col("home_institution_country").isNull()
         & F.col("home_institution_town").isNotNull()
         & (F.col("home_institution_town") != "")
     ).select("id", "home_institution_town")
 
-    # stage 0: manual map on the raw town string (etl.py:714-715)
+    # manual map on the raw town string wins over every stage (etl.py:714-715)
     manual = res.unmatched_towns.select(
         F.col("town").alias("home_institution_town"),
         F.col("country_code").alias("m_code"),
     )
     todo = todo.join(F.broadcast(manual), "home_institution_town", "left")
 
-    def resolve(keys: DataFrame, key_col: str, out_name: str) -> DataFrame:
-        """Match towns (already lowercased keys) against the city-name index;
-        collapse candidates: single country → it, else max population
-        (ties: larger city_id — deterministic)."""
-        cand = keys.join(
-            res.city_names.withColumnRenamed("name_lc", key_col), key_col
+    town = F.col("home_institution_town")
+    keys = [F.lower(F.trim(town))]
+    for delim in [", ", " - ", ". "]:
+        parts = F.split(town, F.lit(delim), -1)
+        keys.append(
+            F.when(F.size(parts) > 1, F.lower(F.trim(F.element_at(parts, 1))))
         )
-        # single-country candidate sets resolve to that country either way,
-        # so max-population pick covers both reference branches
-        # (etl.py:735-750); population ties break on city_id (deterministic;
-        # the reference's stable-sort tie is order-of-load arbitrary).
-        wpop = Window.partitionBy("id").orderBy(
-            F.desc("population"), F.desc("city_id")
+    staged = F.inline(
+        F.array(
+            *[
+                F.struct(F.lit(i).alias("_stage"), k.alias("name_lc"))
+                for i, k in enumerate(keys)
+            ]
         )
-        return (
-            cand.withColumn("_rk", F.row_number().over(wpop))
-            .filter(F.col("_rk") == 1)
-            .select("id", F.col("countrycode").alias(out_name))
-        )
+    )
+    cand = todo.select("id", "m_code", staged).join(res.city_names, "name_lc", "left")
 
-    key = F.lower(F.trim(F.col("home_institution_town")))
-    exact = resolve(todo.select("id", key.alias("_k")), "_k", "exact_code")
-
-    splits = []
-    for i, delim in enumerate([", ", " - ", ". "]):
-        parts = F.split(F.col("home_institution_town"), F.lit(delim), -1)
-        keys = (
-            todo.filter(F.size(parts) > 1)
-            .select("id", F.lower(F.trim(F.element_at(parts, 1))).alias("_k"))
-        )
-        splits.append(resolve(keys, "_k", f"split_code_{i}"))
-
-    resolved = todo.join(exact, "id", "left")
-    for i, s in enumerate(splits):
-        resolved = resolved.join(s, "id", "left")
-    resolved = resolved.select(
-        "id",
-        F.coalesce(
-            "m_code", "exact_code", "split_code_0", "split_code_1", "split_code_2"
-        ).alias("found_code"),
-    ).filter(F.col("found_code").isNotNull())
+    # per stage, single-country candidate sets resolve to that country either
+    # way, so the max-population pick covers both reference branches
+    # (etl.py:735-750); population ties break on city_id (deterministic; the
+    # reference's stable-sort tie is order-of-load arbitrary).
+    wpop = Window.partitionBy("id", "_stage").orderBy(
+        F.desc("population"), F.desc("city_id")
+    )
+    winners = cand.withColumn("_rk", F.row_number().over(wpop)).filter(
+        F.col("_rk") == 1
+    )
+    # the lowest stage whose pick has a country code resolves the town
+    first_code = F.min_by(
+        "countrycode", F.when(F.col("countrycode").isNotNull(), F.col("_stage"))
+    )
+    resolved = (
+        winners.groupBy("id", "m_code")
+        .agg(first_code.alias("city_code"))
+        .select("id", F.coalesce("m_code", "city_code").alias("found_code"))
+        .filter(F.col("found_code").isNotNull())
+    )
 
     # code → country id (round-agnostic translate against the Country table)
     resolved = resolved.join(
@@ -637,43 +640,50 @@ def aggregate_evaluation_scores(
     - a row exists for every (project, type) pair even when count = 0;
     - mode = most frequent, first-encountered in PK order on ties — the
       exact semantics of ``statistics.mode`` over PK-ordered rows.
+
+    The 7 score columns are melted in one projection of the score rows, so
+    the VisitorProject lineage is read once by the stats, once by the mode
+    and once by the (project, type) grid, not once per score column.
     """
     vp = visitor_project.select(
         F.col("id").alias("visitor_project_id"),
         "synth_round",
         F.col("original_project_id").alias("UserProject_ID"),
     )
-    joined = vp.join(scores_src, ["synth_round", "UserProject_ID"], "left")
 
     # melt the 7 score columns (F24) with per-round totals
-    melted = None
-    for col, default_total, r4_total in SCORE_DEFINITIONS:
-        name = " ".join(col.split("_")[:-1])
+    names = [" ".join(col.split("_")[:-1]) for col, _, _ in SCORE_DEFINITIONS]
+
+    def melt(name: str, col: str, default_total, r4_total):
         total = F.when(F.col("synth_round") == 4, F.lit(r4_total)).otherwise(
             F.lit(default_total)
         )
-        one = joined.select(
-            "visitor_project_id",
+        return F.struct(
             F.lit(name).alias("name"),
             F.col(col).cast("double").alias("score"),
             total.cast("double").alias("total"),
-            F.col("PK_App_Score_ID").alias("pk"),
         )
-        melted = one if melted is None else melted.unionByName(one)
 
-    vals = melted.filter(F.col("score").isNotNull() & (F.col("score") != 0))
-    vals = vals.withColumn("norm", F.col("score") / F.col("total"))
+    melted = scores_src.select(
+        "synth_round",
+        "UserProject_ID",
+        F.col("PK_App_Score_ID").alias("pk"),
+        F.inline(F.array(*[melt(n, *d) for n, d in zip(names, SCORE_DEFINITIONS)])),
+    )
+    vals = vp.join(
+        melted.filter(F.col("score").isNotNull() & (F.col("score") != 0)),
+        ["synth_round", "UserProject_ID"],
+    ).withColumn("norm", F.col("score") / F.col("total"))
 
     stats = vals.groupBy("visitor_project_id", "name").agg(
         F.count(F.lit(1)).alias("count"),
         F.avg("norm").alias("mean"),
         F.sum("norm").alias("sum"),
         F.stddev_samp("norm").alias("_sd"),
-        F.count(F.lit(1)).alias("_n"),
     )
     stats = stats.withColumn(
-        "std_dev", F.when(F.col("_n") >= 2, F.col("_sd"))
-    ).drop("_sd", "_n")
+        "std_dev", F.when(F.col("count") >= 2, F.col("_sd"))
+    ).drop("_sd")
 
     counts = vals.groupBy("visitor_project_id", "name", "norm").agg(
         F.count(F.lit(1)).alias("_c"), F.min("pk").alias("_first_pk")
@@ -688,8 +698,9 @@ def aggregate_evaluation_scores(
     )
 
     # full grid: every (project, type) row exists, count coalesced to 0
-    types = melted.select("name").distinct()
-    grid = vp.select("visitor_project_id").distinct().crossJoin(F.broadcast(types))
+    grid = vp.select(
+        "visitor_project_id", F.explode(F.array(*map(F.lit, names))).alias("name")
+    )
     return (
         grid.join(stats, ["visitor_project_id", "name"], "left")
         .join(mode, ["visitor_project_id", "name"], "left")

@@ -262,7 +262,8 @@ def _hard_negatives_oracle() -> str:
     candidate stage."""
     from .similarity_queries import _COSINE_CTE, _N_QUERIES
 
-    assert _HN_QUERIES == _N_QUERIES, "q185 assumes the shared query set"
+    if _HN_QUERIES != _N_QUERIES:
+        raise ValueError("q185 assumes the shared query set")
     return f"""
 WITH {_COSINE_CTE},
 cand AS (

@@ -1568,7 +1568,8 @@ def _ir_eval_oracle() -> str:
     from .similarity_queries import _COSINE_CTE, _N_QUERIES
 
     cos = _COSINE_CTE.replace(f"vec_id < {_N_QUERIES}", "vec_id = 0")
-    assert "vec_id = 0" in cos, "cosine CTE shape changed; fix the rewrite"
+    if "vec_id = 0" not in cos:
+        raise RuntimeError("cosine CTE shape changed; fix the rewrite")
     return f"""
 WITH {_BM25_CTES},
 {cos},

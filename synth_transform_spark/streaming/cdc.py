@@ -91,5 +91,6 @@ def apply_cdc_stream(
     )
     q.awaitTermination()
     spark = stream.sparkSession
-    assert state["path"] is not None, "stream produced no batches"
+    if state["path"] is None:
+        raise RuntimeError("stream produced no batches")
     return spark.read.parquet(state["path"])

@@ -30,12 +30,18 @@ Synthesis (10 copies, c = 0..9; c = 0 is the original rows verbatim):
   copy digit is inserted THREE times after the '#' of c_name, so each
   copy's digit tails carry a leading "ccc" block. Within a copy, pairwise
   levenshtein distances are exactly the original's (shared prefix:
-  lev(P+a, P+b) = lev(a, b)); across copies, no depth-2 deletion key can
-  collide for single-digit c — at most 2 of the 3 leading copy digits can
-  be deleted, so every key keeps a first character that differs between
-  copies (the c = 0 originals keep their leading '0'). Pair counts
-  therefore grow exactly linearly, and candidate growth measures the
-  ALGORITHM, same argument as documents.
+  lev(P+a, P+b) = lev(a, b)); across copies, no depth-2 SEQUENCE-mode
+  deletion key (q180's keys) can collide for single-digit c — at most 2
+  of the 3 leading copy digits can be deleted, so every key keeps a first
+  character that differs between copies (the c = 0 originals keep their
+  leading '0'). Pair counts therefore grow exactly linearly, and
+  candidate growth measures the ALGORITHM, same argument as documents.
+  The claim does not hold for the ``sorted_multiset`` key variant
+  (q470, plans/linkage_queries.py:331): sorting the digits moves the copy
+  block, so e.g. copy 1 of custkey 12220 and copy 2 of custkey 1111 share
+  a digit multiset and cross-copy candidates can appear (exact
+  verification still filters them, but candidate growth would not be
+  linear if q470 were added to the probe).
 - lineitem (for q443): l_orderkey + c*1_200_000 — the same offset as
   orders, so per-copy order/lineitem key alignment is preserved.
 - events (for q359): event_id + c*1_000_000, user_id + c*10_000 —
