@@ -51,6 +51,21 @@ def _steal_jiffies() -> int:
         return -1
 
 
+def steal_share(s0: int, s1: int, seconds: float) -> float:
+    """Share of the host's CPU time a co-tenant stole between two
+    ``_steal_jiffies`` readings ``seconds`` apart: over a window of wall
+    length W on C cpus at USER_HZ jiffies/sec the host had C*HZ*W
+    cpu-jiffies to give, and the stolen jiffies are that share of it.
+    -1 when either reading failed."""
+    if s0 < 0 or s1 < 0 or seconds <= 0:
+        return -1.0
+    try:
+        hz = os.sysconf("SC_CLK_TCK")
+    except (OSError, ValueError):  # pragma: no cover
+        hz = 100
+    return (s1 - s0) / (hz * (os.cpu_count() or 32) * seconds)
+
+
 def plan_fingerprint(df) -> str:
     """Stable hash of the canonicalised physical plan.
 
@@ -205,24 +220,17 @@ def main() -> int:
     steal_ext_after = _steal_jiffies()
     total = round(sum(timings.values()), 3)
 
-    # Steal-normalized companion metrics (round-9 verdict #5). Over a timed
-    # window of wall length W on C cpus at USER_HZ jiffies/sec, the host had
-    # C*HZ*W cpu-jiffies to give; `steal` is the share a co-tenant took. If a
-    # fraction f was stolen uniformly, observed wall ~ ideal / (1 - f), so
-    # ideal ~ observed * (1 - f). Core and extended totals are normalized
+    # Steal-normalized companion metrics (round-9 verdict #5). If a fraction
+    # f (`steal_share`) was stolen uniformly, observed wall ~ ideal / (1 - f),
+    # so ideal ~ observed * (1 - f). Core and extended totals are normalized
     # over their OWN windows (round-11 advice). Reported alongside the raw
     # values, never in their place — raw stays comparable across rounds.
-    try:
-        hz = os.sysconf("SC_CLK_TCK")
-        ncpu = os.cpu_count() or 32
-    except (OSError, ValueError):  # pragma: no cover
-        hz, ncpu = 100, 32
-
     def _norm(value: float, s0: int, s1: int, wall: float) -> tuple[float, float]:
-        if s0 >= 0 and s1 >= 0 and wall > 0:
-            f = min(max((s1 - s0) / (hz * ncpu * wall), 0.0), 0.9)
-            return f, round(value * (1.0 - f), 3)
-        return -1.0, -1.0
+        f = steal_share(s0, s1, wall)
+        if f < 0:
+            return -1.0, -1.0
+        f = min(max(f, 0.0), 0.9)
+        return f, round(value * (1.0 - f), 3)
 
     steal_frac, value_normalized = _norm(
         total, steal_timed_before, steal_timed_after, timed_wall

@@ -77,27 +77,26 @@ def cmd_generate(args) -> int:
 
 
 # -- rebuild ----------------------------------------------------------------
-def cmd_rebuild(args) -> int:
-    from .pipeline.rebuild import TABLE_ORDER, rebuild
+def read_inputs(spark: SparkSession, sources_dir: str, resources_dir: str):
+    """The rebuild inputs from their parquet directories: (sources, Resources)."""
     from .pipeline.steps import Resources
 
+    def read(d: str, name: str) -> DataFrame:
+        return spark.read.parquet(os.path.join(d, f"{name}.parquet"))
+
+    sources = {t: read(sources_dir, t) for t in SOURCE_TABLES}
+    res = Resources(
+        workbook={s: read(resources_dir, f"workbook_{s}") for s in WORKBOOK_SHEETS},
+        **{t: read(resources_dir, t) for t in RESOURCE_TABLES},
+    )
+    return sources, res
+
+
+def cmd_rebuild(args) -> int:
+    from .pipeline.rebuild import TABLE_ORDER, rebuild
+
     spark = _spark("synth-rebuild")
-    sources = {
-        t: spark.read.parquet(os.path.join(args.sources, f"{t}.parquet"))
-        for t in SOURCE_TABLES
-    }
-    res_kw = {
-        t: spark.read.parquet(os.path.join(args.resources, f"{t}.parquet"))
-        for t in RESOURCE_TABLES
-    }
-    workbook = {
-        s: spark.read.parquet(
-            os.path.join(args.resources, f"workbook_{s}.parquet")
-        )
-        for s in WORKBOOK_SHEETS
-    }
-    res = Resources(workbook=workbook, **res_kw)
-    tables, _ctx = rebuild(sources, res)
+    tables, _ctx = rebuild(*read_inputs(spark, args.sources, args.resources))
     os.makedirs(args.out, exist_ok=True)
     counts = {}
     for name in list(TABLE_ORDER) + ["vw_project_access_requests"]:

@@ -624,31 +624,14 @@ def pq_pack_codebook(
     return packed.select(cb.alias("_cb"))
 
 
-def _cb_literal(sub_cb: list) -> "F.Column":
-    """One subspace's codewords as a plan literal: array<array<double>>.
-
-    Built as a CreateArray tree of literal leaves — every node is foldable,
-    so ConstantFolding collapses it to a single Literal before execution
-    (unlike the rejected 8000-node argmin unroll, whose nodes referenced
-    row data and could NOT fold). At q132's sizes that is 16 codewords x
-    4 dims per subspace — ~100 foldable nodes, no analysis-cost trap.
-    """
-    if not sub_cb:
-        return F.array().cast("array<array<double>>")
-    return F.array(
-        *[F.array(*[F.lit(float(v)) for v in cvec]) for cvec in sub_cb]
-    )
-
-
 def pq_encode(
     vectors: DataFrame,
-    codebook: DataFrame | None,
+    codebook: DataFrame,
     m: int = PQ_M,
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_codes: int = PQ_CODES,
-    codebook_rows: list | None = None,
 ) -> DataFrame:
     """Encode each vector as ``m`` codeword ids: (id, codes array<int>).
 
@@ -667,22 +650,15 @@ def pq_encode(
     analysis/codegen cost made the query 4x SLOWER end to end.
     (b) The form below keeps the HOF evaluation; the effective round-11
     mitigation was materializing the encoded relation in ``pq_topk`` so
-    encode runs once, not once per query pairing.
-
-    Round 12 (``codebook_rows`` literal path — guide §1.2/§4): when the
-    caller passes the collected codebook, each subspace's codewords become
-    ONE plan-time literal (``_cb_literal``) and the per-row expression
-
-    - stops traversing the broadcast ``_cb`` outer struct per codeword
-      (no codebook join at all),
-    - binds the subvector slice ONCE per subspace via a single-element
-      ``transform`` (the ``_gram_expr`` idiom) — inlined, the interpreted
-      HOF re-evaluated ``slice(_vd, ...)`` once per codeword: m x n_codes
-      slice allocations per row collapse to m.
-
-    Arithmetic is untouched — the same ``_d2`` zip_with/aggregate over the
-    same doubles in the same order, the same 4dp round, the same
-    (d, j)-struct ``array_min`` tie-break — so codes are bit-identical.
+    encode runs once, not once per query pairing. (c) Collecting the
+    codebook to plan literals at build time (one ``array<array<double>>``
+    literal per subspace, no codebook join) was adopted in round 12 and
+    then deleted as a measured regression: q132 went 2.04 → 5.22 s at
+    32 cores and 3.12 → 5.80 s at 4 cores (isolated, best of 3), and the
+    build-time collect added two Spark jobs before the action. Do not
+    retry it without a new reason; the next candidate is a vectorised
+    batch kernel (``mapInArrow``) with Spark's exact sum order and
+    HALF_UP rounding.
     """
     from ..sources.readers import ensure_parallelism
 
@@ -693,27 +669,6 @@ def pq_encode(
     # core (measured 3.08 s vs 0.49 s at sf0.1, 2k vectors on local[32]).
     # ensure_parallelism is a no-op at real data scale (scan already split).
     vectors = ensure_parallelism(vectors)
-
-    if codebook_rows is not None:
-        cb_lits = [_cb_literal(sub_cb) for sub_cb in codebook_rows]
-
-        def code_for_lit(mi):
-            sv = F.slice(F.col("_vd"), mi * sub + 1, sub)
-            scored_of = lambda svb: F.array_min(  # noqa: E731
-                F.transform(
-                    cb_lits[mi],
-                    lambda c, j: F.struct(
-                        F.round(_d2(svb, c), 4).alias("d"),
-                        j.cast("int").alias("j"),
-                    ),
-                )
-            )["j"]
-            return F.element_at(F.transform(F.array(sv), scored_of), 1)
-
-        codes = F.array(*[code_for_lit(mi) for mi in range(m)])
-        return vectors.select(F.col(id_col), vd.alias("_vd")).select(
-            id_col, codes.alias("codes")
-        )
 
     def code_for(mi):
         scored = F.transform(
@@ -775,24 +730,7 @@ def pq_topk(
     sub = dim // m
     shortlist = shortlist or 4 * k
     seeds = vectors.filter(F.col(id_col) < n_codes)
-    # Round 12: the trained codebook is COLLECTED once (m x n_codes x sub
-    # doubles — ~1 KB at q132's sizes; the collect replaces the broadcast
-    # exchange the join path built from the same seed scan) and folded
-    # into plan literals, so encode and the query distance tables compile
-    # against constants instead of traversing the broadcast struct per
-    # codeword. Recomputed from the parquet inputs on every invocation —
-    # nothing is memoised across runs.
-    packed = pq_pack_codebook(
-        seeds, m=m, dim=dim, id_col=id_col, vec_col=vec_col
-    ).collect()[0]["_cb"]
-    for sub_cb in packed:
-        # dense re-index invariant from pq_pack_codebook (codes are the
-        # positions of sid-ascending seeds) — the literal path relies on
-        # the transform index REPLACING the stored j.
-        if [c["j"] for c in sub_cb] != list(range(len(sub_cb))):
-            raise ValueError("pq codebook codes are not position-dense")
-    cb_rows = [[list(c["cvec"]) for c in sub_cb] for sub_cb in packed]
-    cb_lits = [_cb_literal(sub_cb) for sub_cb in cb_rows]
+    cb = pq_pack_codebook(seeds, m=m, dim=dim, id_col=id_col, vec_col=vec_col)
     # The encoded corpus is MATERIALIZED before the query cross (round 11):
     # left lazy, the per-vector argmin encode pipelines INTO the
     # broadcast-nested-loop join projection and re-evaluates once per
@@ -803,28 +741,22 @@ def pq_topk(
 
     encoded = persist_tracked(
         pq_encode(
-            vectors, None, m=m, dim=dim, id_col=id_col, vec_col=vec_col,
-            n_codes=n_codes, codebook_rows=cb_rows,
+            vectors, cb, m=m, dim=dim, id_col=id_col, vec_col=vec_col,
+            n_codes=n_codes,
         )
     )
 
     vd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-
-    def dtable_for(mi):
-        qsv = F.slice(F.col("_qd"), mi * sub + 1, sub)
-        return F.element_at(
-            F.transform(
-                F.array(qsv),
-                lambda qv: F.transform(
-                    cb_lits[mi], lambda c: F.round(_d2(qv, c), 4)
-                ),
-            ),
-            1,
-        )
-
-    dtable = F.array(*[dtable_for(mi) for mi in range(m)])
+    dtable = F.transform(
+        F.sequence(F.lit(0), F.lit(m - 1)),
+        lambda mi: F.transform(
+            F.element_at(F.col("_cb"), mi + 1),
+            lambda c: F.round(_d2(F.slice(F.col("_qd"), mi * sub + 1, sub), c["cvec"]), 4),
+        ),
+    )
     q = (
-        queries.select(F.col(id_col).alias("query_id"), vd.alias("_qd"))
+        queries.join(F.broadcast(cb))
+        .select(F.col(id_col).alias("query_id"), vd.alias("_qd"), F.col("_cb"))
         .select("query_id", dtable.alias("_dtable"))
     )
     # ADC lookup-sum UNROLLED over the m subspaces (round 11): the

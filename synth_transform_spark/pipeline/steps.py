@@ -15,6 +15,7 @@ scalable two-pass variant is a drop-in swap at cluster scale.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
@@ -531,38 +532,29 @@ def project_access_requests_view(
 # ---------------------------------------------------------------------------
 # Step 14: missing-country enrichment (etl.py:674-769) — J12 + W3
 # ---------------------------------------------------------------------------
-def fill_missing_country(
-    visitor_project: DataFrame, res: Resources, country: DataFrame
-) -> DataFrame:
-    """For rows with NULL country and a town: manual map wins, else exact
-    lowercase name/alt-name match, else first delimiter split (', ', ' - ',
-    '. ') whose prefix matches; ambiguity resolved by single-country check
-    then max population (W3). The per-row scan over ~25k cities becomes one
-    equi-join against a precomputed name index.
+#: The split stages' delimiters, in priority order. Each is
+#: literal, as in the reference's ``str.split``; ``F.split`` takes a Java
+#: regex, so ``resolve_towns`` escapes them ('. ' unescaped matches any
+#: character followed by a space).
+TOWN_DELIMS = (", ", " - ", ". ")
 
-    Each todo row carries its four stage-tagged lookup keys (stage 0 exact,
-    stages 1-3 the splits, NULL when the town does not split), so the
-    VisitorProject lineage is read once and joined to the name index once.
-    Each stage picks its most populous candidate; the lowest stage whose
-    pick has a country code wins, so a pick without a code falls through to
-    the next stage."""
-    todo = visitor_project.filter(
-        F.col("home_institution_country").isNull()
-        & F.col("home_institution_town").isNotNull()
-        & (F.col("home_institution_town") != "")
-    ).select("id", "home_institution_town")
 
-    # manual map on the raw town string wins over every stage (etl.py:714-715)
-    manual = res.unmatched_towns.select(
-        F.col("town").alias("home_institution_town"),
-        F.col("country_code").alias("m_code"),
-    )
-    todo = todo.join(F.broadcast(manual), "home_institution_town", "left")
+def resolve_towns(todo: DataFrame, city_names: DataFrame) -> DataFrame:
+    """Stage-keyed town → city country code (J12, W3):
+    (id, home_institution_town, m_code) → (id, m_code, city_code).
 
+    Each row carries its four stage-tagged lookup keys (stage 0 the exact
+    lowercase name/alt-name, stages 1-3 the prefix before the first
+    ``TOWN_DELIMS`` split, NULL when the town does not split), so the input
+    lineage is read once and joined to the name index once. Each stage
+    picks its most populous candidate; the lowest stage whose pick has a
+    country code wins, so a pick without a code falls through to the next
+    stage. ``city_code`` is NULL when no stage resolves; the caller
+    coalesces ``m_code`` (the manual map) over it."""
     town = F.col("home_institution_town")
     keys = [F.lower(F.trim(town))]
-    for delim in [", ", " - ", ". "]:
-        parts = F.split(town, F.lit(delim), -1)
+    for delim in TOWN_DELIMS:
+        parts = F.split(town, F.lit(re.escape(delim)), -1)
         keys.append(
             F.when(F.size(parts) > 1, F.lower(F.trim(F.element_at(parts, 1))))
         )
@@ -574,7 +566,7 @@ def fill_missing_country(
             ]
         )
     )
-    cand = todo.select("id", "m_code", staged).join(res.city_names, "name_lc", "left")
+    cand = todo.select("id", "m_code", staged).join(city_names, "name_lc", "left")
 
     # per stage, single-country candidate sets resolve to that country either
     # way, so the max-population pick covers both reference branches
@@ -590,9 +582,31 @@ def fill_missing_country(
     first_code = F.min_by(
         "countrycode", F.when(F.col("countrycode").isNotNull(), F.col("_stage"))
     )
+    return winners.groupBy("id", "m_code").agg(first_code.alias("city_code"))
+
+
+def fill_missing_country(
+    visitor_project: DataFrame, res: Resources, country: DataFrame
+) -> DataFrame:
+    """For rows with NULL country and a town: manual map wins, else exact
+    lowercase name/alt-name match, else first delimiter split (', ', ' - ',
+    '. ') whose prefix matches; ambiguity resolved by single-country check
+    then max population (W3). The per-row scan over ~25k cities becomes one
+    equi-join against a precomputed name index (``resolve_towns``)."""
+    todo = visitor_project.filter(
+        F.col("home_institution_country").isNull()
+        & F.col("home_institution_town").isNotNull()
+        & (F.col("home_institution_town") != "")
+    ).select("id", "home_institution_town")
+
+    # manual map on the raw town string wins over every stage (etl.py:714-715)
+    manual = res.unmatched_towns.select(
+        F.col("town").alias("home_institution_town"),
+        F.col("country_code").alias("m_code"),
+    )
+    todo = todo.join(F.broadcast(manual), "home_institution_town", "left")
     resolved = (
-        winners.groupBy("id", "m_code")
-        .agg(first_code.alias("city_code"))
+        resolve_towns(todo, res.city_names)
         .select("id", F.coalesce("m_code", "city_code").alias("found_code"))
         .filter(F.col("found_code").isNotNull())
     )

@@ -5,8 +5,8 @@ gets a driver-gated twin over the public testdata tables, with every input
 derived DETERMINISTICALLY from table columns (identical derivations on the
 Spark and DuckDB sides) so the driver's value-hash compare is meaningful.
 The Spark side runs the same operator code paths the pipeline uses
-(cleaning.clean_institution; the staged resolve chain of
-pipeline/steps.fill_missing_country re-expressed over the derived index).
+(cleaning.clean_institution; q52 runs ``steps.resolve_towns``, the staged
+resolver of pipeline/steps.fill_missing_country, over the derived index).
 
 Reference lineage:
 - J3  GUID containment lookup — /root/reference/synth/resources.py:445-457
@@ -20,12 +20,11 @@ Reference lineage:
 
 from __future__ import annotations
 
-import re
-
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import cleaning
+from ..pipeline.steps import resolve_towns
 from ..sources.readers import load_table
 from .registry import register
 
@@ -96,7 +95,6 @@ def q51_guid_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q52 constants: city index from parts < 400 (every p_name token is a city
 # name/alt-name), towns to resolve from parts 400-799 (second token, with a
 # per-row delimiter treatment), manual map = every 50th town → 'MM'.
-_Q52_DELIMS = [", ", " - ", ". "]
 
 
 @register(
@@ -183,16 +181,17 @@ WHERE COALESCE(m.m_code, e.exact_code, s0.split_code_0, s1.split_code_1,
 def q52_city_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J12: staged town→country resolution over a derived city-name index.
 
-    Same stage chain as pipeline/steps.fill_missing_country (reference
-    etl.py:689-752): manual map on the raw string wins, else exact
-    lowercase match against the name/alt-name index, else the first
-    delimiter (', ', ' - ', '. ') whose prefix matches; ambiguous candidate
-    sets collapse by max population with a deterministic city_id tie-break
-    (W3 argmax). Index and towns are derived from ``part`` name tokens —
-    the color vocabulary repeats across parts, so genuine ambiguity (same
-    name, many cities, different countries) is exercised. All stages are
-    broadcast equi-joins + per-town windows; nothing scans the index
-    per-row as the reference does.
+    Runs ``steps.resolve_towns``, the resolver of
+    pipeline/steps.fill_missing_country (reference etl.py:689-752), so the
+    oracle checks the code ``synth rebuild`` runs: manual map on the raw
+    string wins, else exact lowercase match against the name/alt-name
+    index, else the first literal delimiter (', ', ' - ', '. ') whose
+    prefix matches; ambiguous candidate sets collapse by max population
+    with a deterministic city_id tie-break (W3 argmax). Index and towns are
+    derived from ``part`` name tokens — the color vocabulary repeats across
+    parts, so genuine ambiguity (same name, many cities, different
+    countries) is exercised. One broadcast equi-join + a per-(town, stage)
+    window; nothing scans the index per-row as the reference does.
     """
     part = load_table(spark, sf_dir, "part")
     toks = F.array_distinct(F.split(F.col("p_name"), " "))
@@ -217,47 +216,23 @@ def q52_city_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     manual = (
         towns.filter(F.col("town_id") % 50 == 0)
-        .select("town", F.lit("MM").alias("m_code"))
+        .select(
+            F.col("town").alias("home_institution_town"), F.lit("MM").alias("m_code")
+        )
         .distinct()
     )
-
-    def resolve(keys: DataFrame, out_name: str) -> DataFrame:
-        cand = keys.join(F.broadcast(cities), "name_lc")
-        wpop = Window.partitionBy("town_id").orderBy(
-            F.desc("population"), F.desc("city_id")
-        )
-        return (
-            cand.withColumn("_rk", F.row_number().over(wpop))
-            .filter(F.col("_rk") == 1)
-            .select("town_id", F.col("countrycode").alias(out_name))
-        )
-
-    exact = resolve(
-        towns.select("town_id", F.lower(F.trim(F.col("town"))).alias("name_lc")),
-        "exact_code",
+    todo = towns.select(
+        F.col("town_id").alias("id"), F.col("town").alias("home_institution_town")
+    ).join(F.broadcast(manual), "home_institution_town", "left")
+    resolved = resolve_towns(todo, F.broadcast(cities)).select(
+        F.col("id").alias("town_id"),
+        F.coalesce("m_code", "city_code").alias("country_code"),
     )
-    splits = []
-    for i, delim in enumerate(_Q52_DELIMS):
-        # F.split takes a Java regex: escape so '. ' splits on a literal
-        # dot+space (DuckDB STRING_SPLIT and Python str.split are literal).
-        parts = F.split(F.col("town"), F.lit(re.escape(delim)), -1)
-        keys = towns.filter(F.size(parts) > 1).select(
-            "town_id", F.lower(F.trim(F.element_at(parts, 1))).alias("name_lc")
-        )
-        splits.append(resolve(keys, f"split_code_{i}"))
-
-    resolved = towns.join(F.broadcast(manual), "town", "left").join(
-        exact, "town_id", "left"
+    return (
+        towns.join(resolved, "town_id")
+        .select("town_id", "town", "country_code")
+        .filter(F.col("country_code").isNotNull())
     )
-    for s in splits:
-        resolved = resolved.join(s, "town_id", "left")
-    return resolved.select(
-        "town_id",
-        "town",
-        F.coalesce(
-            "m_code", "exact_code", "split_code_0", "split_code_1", "split_code_2"
-        ).alias("country_code"),
-    ).filter(F.col("country_code").isNotNull())
 
 
 # q53 master_clean mapping (dirty → clean; 'nil' ⇒ scrub to NULL) — literal

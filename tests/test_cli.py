@@ -6,41 +6,11 @@ from __future__ import annotations
 import json
 import os
 
-import pytest
-
-from pipeline_fixtures import build_resources, build_sources
-from synth_transform_spark.cli import SOURCE_TABLES, main
+from synth_transform_spark.cli import main
 
 
-@pytest.fixture(scope="module")
-def fixture_dirs(spark, tmp_path_factory):
-    root = tmp_path_factory.mktemp("cli")
-    src_dir, res_dir = root / "sources", root / "resources"
-    src_dir.mkdir(), res_dir.mkdir()
-    sources = build_sources(spark)
-    for name in SOURCE_TABLES:
-        sources[name].write.mode("overwrite").parquet(str(src_dir / f"{name}.parquet"))
-    res = build_resources(spark, str(root))
-    for field in (
-        "user_ids",
-        "user_ages",
-        "master_clean",
-        "unmatched_towns",
-        "output_dois",
-        "doi_metadata",
-        "city_names",
-        "countries",
-    ):
-        getattr(res, field).write.mode("overwrite").parquet(
-            str(res_dir / f"{field}.parquet")
-        )
-    for sheet, df in res.workbook.items():
-        df.write.mode("overwrite").parquet(str(res_dir / f"workbook_{sheet}.parquet"))
-    return root, src_dir, res_dir
-
-
-def test_generate_emits_structtype(spark, fixture_dirs, capsys):
-    _, src_dir, _ = fixture_dirs
+def test_generate_emits_structtype(spark, pipeline_dirs, capsys):
+    _, src_dir, _ = pipeline_dirs
     rc = main(["generate", "--input", str(src_dir / "NHM_Call.parquet")])
     out = capsys.readouterr().out
     assert rc == 0
@@ -53,8 +23,8 @@ def test_generate_emits_structtype(spark, fixture_dirs, capsys):
 
 # default tier: rebuild plus dump takes ~20 s on a 4-core host, inside the
 # 60 s budget for a default-tier test
-def test_rebuild_and_dump(spark, fixture_dirs, capsys):
-    root, src_dir, res_dir = fixture_dirs
+def test_rebuild_and_dump(spark, pipeline_dirs, capsys):
+    root, src_dir, res_dir = pipeline_dirs
     out_dir = root / "warehouse"
     rc = main(
         [
@@ -83,8 +53,8 @@ def test_rebuild_and_dump(spark, fixture_dirs, capsys):
     assert sql.index("CREATE TABLE `Round`") < sql.index("CREATE TABLE `VisitorProject`")
 
 
-def test_update_refreshes_cache_incrementally(spark, fixture_dirs, capsys):
-    root, src_dir, _ = fixture_dirs
+def test_update_refreshes_cache_incrementally(spark, pipeline_dirs, capsys):
+    root, src_dir, _ = pipeline_dirs
     cache_path = str(root / "doi_cache.parquet")
     keys = str(src_dir / "NHM_Outputs.parquet")
     rc = main(
@@ -104,7 +74,7 @@ def test_update_refreshes_cache_incrementally(spark, fixture_dirs, capsys):
     assert n2 == n1
 
 
-def test_update_parse_doi_derives_column(spark, fixture_dirs, capsys):
+def test_update_parse_doi_derives_column(spark, pipeline_dirs, capsys):
     """--parse doi completes the reference's update flow: the fetched
     payloads are parsed into a `doi` column (enrichment.payloads), the
     column survives re-runs (derived → dropped → re-derived), and the
@@ -112,7 +82,7 @@ def test_update_parse_doi_derives_column(spark, fixture_dirs, capsys):
     error."""
     import pyspark.sql.functions as F
 
-    root, src_dir, _ = fixture_dirs
+    root, src_dir, _ = pipeline_dirs
     cache_path = str(root / "doi_cache2.parquet")
     keys = str(src_dir / "NHM_Outputs.parquet")
     args = ["update", "--keys", keys, "--key-col", "Output_ID",
@@ -132,13 +102,13 @@ def test_update_parse_doi_derives_column(spark, fixture_dirs, capsys):
     assert "doi" in spark.read.parquet(cache_path).columns
 
 
-def test_update_without_parse_preserves_derived_doi(spark, fixture_dirs, capsys):
+def test_update_without_parse_preserves_derived_doi(spark, pipeline_dirs, capsys):
     """Round-11 advice: a plain `update` (no --parse) on a cache that was
     built WITH --parse doi must re-derive the column, not silently strip
     it from the persisted cache."""
     import pyspark.sql.functions as F
 
-    root, src_dir, _ = fixture_dirs
+    root, src_dir, _ = pipeline_dirs
     cache_path = str(root / "doi_cache3.parquet")
     keys = str(src_dir / "NHM_Outputs.parquet")
     base = ["update", "--keys", keys, "--key-col", "Output_ID",

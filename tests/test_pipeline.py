@@ -9,6 +9,7 @@ import os
 import pytest
 
 import pipeline_fixtures as fx
+from synth_transform_spark.cli import read_inputs
 from synth_transform_spark.pipeline import rebuild
 from synth_transform_spark.pipeline.errors import (
     DuplicateUserGUIDError,
@@ -17,11 +18,9 @@ from synth_transform_spark.pipeline.errors import (
 
 
 @pytest.fixture(scope="module")
-def rebuilt(spark, tmp_path_factory):
-    tmpdir = str(tmp_path_factory.mktemp("resources"))
-    sources = fx.build_sources(spark)
-    res = fx.build_resources(spark, tmpdir)
-    return rebuild(sources, res)
+def rebuilt(spark, pipeline_dirs):
+    _, src_dir, res_dir = pipeline_dirs
+    return rebuild(*read_inputs(spark, str(src_dir), str(res_dir)))
 
 
 @pytest.fixture(scope="module")
@@ -194,8 +193,10 @@ class TestMissingCountryStagePriority:
                 # ", " split "alpha" beats the " - " split "alpha, beta"
                 ("alpha", "DE", 1, 3),
                 ("alpha, beta", "GB", 1000, 4),
-                # ". " is a regex: "Rio Claro" splits after "Ri" ("o " matches)
+                # ". " is literal: "Rio Claro" must not split after "Ri" (as
+                # the regex ". " would, "o " matching); "St. Albans" splits
                 ("ri", "BD", 5, 5),
+                ("st", "GB", 5, 12),
                 # manual map beats an exact match
                 ("islamabad", "BD", 2000000, 6),
                 # population tie → larger city_id
@@ -230,6 +231,7 @@ class TestMissingCountryStagePriority:
             6: ("Twin", None),
             7: ("Gamma, Delta", None),
             8: ("Bath", cid["DE"]),  # country already set: untouched
+            9: ("St. Albans", None),
         }
         vp = spark.createDataFrame(
             [(i, t, c) for i, (t, c) in towns.items()],
@@ -242,12 +244,13 @@ class TestMissingCountryStagePriority:
         assert got == {
             1: cid["FR"],
             2: cid["DE"],
-            3: cid["BD"],
+            3: None,
             4: cid["PK"],
             5: None,
             6: cid["FR"],
             7: cid["US"],
             8: cid["DE"],
+            9: cid["GB"],
         }
 
 

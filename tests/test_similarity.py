@@ -144,27 +144,3 @@ def test_pq_topk_recall_vs_exact_l2(spark):
         recalls.append(len(truth & got) / k)
     assert sum(recalls) / len(recalls) >= 0.4
     assert min(recalls) >= 0.2
-
-
-def test_pq_encode_literal_path_matches_join_path(spark):
-    """Round-12 literal-codebook encode must emit bit-identical codes to
-    the broadcast-join path it replaced (same _d2 arithmetic, same 4dp
-    round, same (d, j) array_min tie-break)."""
-    import pyspark.sql.functions as F
-
-    from synth_transform_spark.operators import similarity
-    from synth_transform_spark.sources.readers import load_table
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    seeds = emb.filter(F.col("vec_id") < similarity.PQ_CODES)
-    cb = similarity.pq_pack_codebook(seeds)
-    packed = cb.collect()[0]["_cb"]
-    assert all(
-        [c["j"] for c in sub_cb] == list(range(len(sub_cb))) for sub_cb in packed
-    )
-    rows = [[list(c["cvec"]) for c in sub_cb] for sub_cb in packed]
-    joined = similarity.pq_encode(emb, cb)
-    lit = similarity.pq_encode(emb, None, codebook_rows=rows)
-    j = {r[0]: list(r[1]) for r in joined.collect()}
-    l = {r[0]: list(r[1]) for r in lit.collect()}
-    assert j == l and len(j) > 0

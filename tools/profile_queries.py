@@ -31,6 +31,8 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import time
 
+from bench import _steal_jiffies, steal_share
+
 
 def main() -> int:
     ap = argparse.ArgumentParser()
@@ -75,15 +77,6 @@ def main() -> int:
         else:
             df.count()
 
-    def steal() -> int:
-        try:
-            with open("/proc/stat") as fh:
-                return int(fh.readline().split()[8])
-        except (OSError, IndexError, ValueError):
-            return -1
-
-    hz = os.sysconf("SC_CLK_TCK")
-    ncpu = os.cpu_count() or 32
     out = {}
     for name in args.queries:
         fn = REGISTRY[name].spark
@@ -100,15 +93,13 @@ def main() -> int:
             spark.catalog.clearCache()
             spark.sparkContext._jvm.System.gc()
             spark.sparkContext.setJobDescription(f"time:{name}:{i}")
-            s0 = steal()
+            s0 = _steal_jiffies()
             t0 = time.perf_counter()
             run(fn(spark, sf_dir))
             dt = time.perf_counter() - t0
-            s1 = steal()
+            s1 = _steal_jiffies()
             times.append(round(dt, 3))
-            fracs.append(
-                round((s1 - s0) / (hz * ncpu * dt), 4) if s0 >= 0 and s1 >= 0 else -1.0
-            )
+            fracs.append(round(steal_share(s0, s1, dt), 4))
         out[name] = {"best": min(times), "all": times, "steal_frac": fracs}
         print(f"# {name}: {out[name]}", file=sys.stderr)
     print(json.dumps(out))
