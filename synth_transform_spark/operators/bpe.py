@@ -34,10 +34,9 @@ EVERY round — measured 3.9→1.1 s at sf0.1, identical merge table):
    "aaaa" the fold takes exactly every other candidate — the same
    odd-ranked-in-run selection the previous window algebra encoded;
 4. rebuild: the fold above IS the rebuild — a narrow map, zero shuffle.
-   State is LAZILY localCheckpoint-ed per round (lineage truncation, one
-   row per vocab word): the next round's argmax collect is the
-   materialising scan, so each round runs ONE job instead of two;
-   multi-executor clusters prefer reliable checkpoint — see caching.py.
+   The loop runs through ``caching.iterate`` with the argmax collect as
+   its convergence test, so each round's state (one row per vocab word)
+   is checkpointed lazily and that collect materialises it.
 
 Everything is deterministic — counts are exact integers, ties break
 lexicographically — so the DuckDB oracle unrolls the same algebra as
@@ -50,6 +49,8 @@ from dataclasses import dataclass
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from ..caching import iterate
 
 
 @dataclass(frozen=True)
@@ -77,25 +78,44 @@ def _initial_state(wc: DataFrame) -> DataFrame:
 
 
 def train(docs: DataFrame, k: int, text_col: str = "text") -> BpeResult:
-    """Learn ``k`` BPE merges over the corpus. Executes one job per round
-    (iterative — not a lazy plan): the one-row argmax collect over the
-    pair-count groupBy (the only shuffle), which also materialises the
-    previous round's lazily-checkpointed fold rebuild (the
+    """Learn ``k`` BPE merges over the corpus. Executes jobs while
+    building (iterative — not a lazy plan): each round's one-row argmax
+    collect over the pair-count groupBy (the only shuffle), which also
+    materialises the round's lazily checkpointed state (the
     distributed-argmax variant was measured SLOWER — see the module
-    docstring)."""
-    # LAZY checkpoints throughout the loop (round 11, second pass): each
-    # round's state has exactly TWO sequential consumers — the next
-    # round's pair-count argmax collect (which scans every partition:
-    # TakeOrdered needs the global order, so it fully materialises the
-    # checkpoint) and then the fold select reading the cached blocks. An
-    # eager checkpoint ran a separate serialise-now job per round — 1 + k
-    # extra job launches for data the very next action scanned anyway.
-    # Bonus: q186 consumes only the collected merges, so the FINAL fold
-    # state never materialises at all on that path (q187's segmentation
-    # still materialises it as its single consumer).
-    state = _initial_state(word_counts(docs, text_col)).localCheckpoint(eager=False)
+    docstring).
+
+    Round r folds in merge r-1 and then finds merge r, so round 1 only
+    checkpoints the initial state and round k+1 only folds in merge k;
+    q186 consumes only the collected merges, so that final state never
+    materialises on its path (q187's segmentation is its one consumer)."""
     merges: list[tuple[int, str, str, int]] = []
-    for rank in range(1, k + 1):
+
+    def fold_last(state: DataFrame) -> DataFrame:
+        if not merges:
+            return state
+        _, left, right, _ = merges[-1]
+        # Greedy leftmost-first merge as an in-row left fold — see the
+        # module docstring for the equivalence argument. F.lit() carries
+        # the symbols (never f-string SQL: corpus symbols can contain
+        # quotes/backslashes).
+        merged_sym = F.array(F.lit(left + right))
+        fold = F.aggregate(
+            F.col("syms"),
+            F.array().cast("array<string>"),
+            lambda acc, s: F.when(
+                (F.size(acc) > 0)
+                & (F.element_at(acc, -1) == F.lit(left))
+                & (s == F.lit(right)),
+                F.concat(F.slice(acc, 1, F.size(acc) - 1), merged_sym),
+            ).otherwise(F.concat(acc, F.array(s))),
+        )
+        return state.select("word", "n", fold.alias("syms"))
+
+    def next_merge(state: DataFrame) -> bool:
+        """Append the most frequent adjacent pair; True when done."""
+        if len(merges) == k:
+            return True
         # adjacency in-row: element i paired with element i+1
         pair_counts = (
             state.filter(F.size("syms") >= 2)
@@ -119,29 +139,13 @@ def train(docs: DataFrame, k: int, text_col: str = "text") -> BpeResult:
             .limit(1)
             .collect()
         )
-        if not top:  # every word is a single symbol — nothing left to merge
-            break
-        left, right, cnt = top[0].sym, top[0].nxt, int(top[0].cnt)
-        merges.append((rank, left, right, cnt))
+        if top:  # else every word is a single symbol — nothing left to merge
+            merges.append((len(merges) + 1, top[0].sym, top[0].nxt, int(top[0].cnt)))
+        return not top
 
-        # Greedy leftmost-first merge as an in-row left fold — see the
-        # module docstring for the equivalence argument. F.lit() carries
-        # the symbols (never f-string SQL: corpus symbols can contain
-        # quotes/backslashes).
-        merged_sym = F.array(F.lit(left + right))
-        fold = F.aggregate(
-            F.col("syms"),
-            F.array().cast("array<string>"),
-            lambda acc, s: F.when(
-                (F.size(acc) > 0)
-                & (F.element_at(acc, -1) == F.lit(left))
-                & (s == F.lit(right)),
-                F.concat(F.slice(acc, 1, F.size(acc) - 1), merged_sym),
-            ).otherwise(F.concat(acc, F.array(s))),
-        )
-        state = state.select("word", "n", fold.alias("syms")).localCheckpoint(
-            eager=False
-        )
+    state = iterate(
+        _initial_state(word_counts(docs, text_col)), fold_last, k + 1, until=next_merge
+    )
     return BpeResult(merges=merges, state=state)
 
 
@@ -285,7 +289,8 @@ def unigram_viterbi(
         # localCheckpoint (not persist): each level references up to
         # ``max_piece`` prior levels, so an un-truncated lineage would grow
         # ~4^12 analyzer nodes - checkpointing keeps every DP step's plan
-        # flat (the graph.py iterative-operator pattern).
+        # flat. Not ``caching.iterate``: the DP keeps every level, not one
+        # state.
         b.append(best.localCheckpoint(eager=True))
 
     out = None

@@ -30,23 +30,31 @@ rows, 2 narrow columns; the join shuffles E on dst. Skew = high-degree
 nodes; boilerplate-heavy corpora produce large near-clique clusters whose
 groupBy(min) handles fan-in via partial aggregation (map-side combine), so
 a million-doc duplicate cluster costs one hot reducer key for a LONG, not
-a row explosion. Every round's result is LAZILY localCheckpoint-ed with
-the round's convergence count as the materialising job: the count is the
-FIRST consumer and scans every partition, so it truncates the round-deep
-lineage in the same job that tests convergence (an eager checkpoint ran a
-second, redundant materialisation job per round). The safety invariant —
-documented at each site — is that the materialising count runs BEFORE any
-other consumer and no single job references the relation twice, so the
-two-refs-in-one-job cache race that forces eager checkpoints elsewhere
-(q27's candidate relation, q149's closure) cannot happen here. On a
-multi-executor cluster prefer reliable ``checkpoint`` — localCheckpoint
-blocks die with an executor (see caching.py).
+a row explosion.
+
+Every loop here except ``bfs_distances`` runs through
+``caching.iterate``, which owns the per-round checkpoint policy and argues
+why it is safe. These operators EXECUTE Spark jobs while their DataFrame
+is built; they are iterative algorithms, not lazy plans.
 """
 
 from __future__ import annotations
 
+from itertools import cycle
+
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
+
+from ..caching import iterate
+
+
+def _symmetrised(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """Both directions of every edge as (s, d), distinct so parallel edges
+    don't multiply join output; checkpointed, since every round re-reads
+    it."""
+    a = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
+    b = edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d"))
+    return a.union(b).distinct().localCheckpoint(eager=True)
 
 
 def connected_components(
@@ -60,49 +68,34 @@ def connected_components(
     ``component`` is the minimum node id in the component — deterministic
     and engine-portable. Only nodes that appear in at least one edge are
     returned (isolated docs are their own singleton clusters by definition;
-    callers that want them can union the node universe in).
-
-    NOTE: building this DataFrame EXECUTES Spark jobs (one convergence
-    count per round) — it is an iterative algorithm, not a lazy plan.
+    callers that want them can union the node universe in). Each round's
+    convergence test counts the labels that dropped; a graph that has not
+    converged in ``max_iter`` rounds raises ``RuntimeError``.
     """
-    a = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-    b = edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d"))
-    # Symmetrised edge list; distinct so parallel edges don't multiply join
-    # output. Checkpointed once — every round re-reads it.
-    sym = a.union(b).distinct().localCheckpoint(eager=True)
+    sym = _symmetrised(edges, src_col, dst_col)
 
-    labels = sym.select(F.col("s").alias("node")).distinct().select(
-        "node", F.col("node").alias("component")
-    )
-    for _ in range(max_iter):
+    def step(labels: DataFrame) -> DataFrame:
+        labels = labels.select("node", "component")
         nbr = (
             sym.join(labels, sym["d"] == labels["node"])
             .groupBy("s")
             .agg(F.min("component").alias("nbr_min"))
         )
-        # LAZY checkpoint: the convergence count below is the first
-        # consumer and scans every partition, so it doubles as the
-        # materialising job — eager + count ran two jobs per round.
-        upd = (
-            labels.join(nbr, labels["node"] == nbr["s"], "left")
-            .select(
-                "node",
-                F.col("component").alias("old_component"),
-                F.least(
-                    "component", F.coalesce("nbr_min", "component")
-                ).alias("component"),
-            )
-            .localCheckpoint(eager=False)
+        return labels.join(nbr, labels["node"] == nbr["s"], "left").select(
+            "node",
+            F.col("component").alias("old_component"),
+            F.least("component", F.coalesce("nbr_min", "component")).alias("component"),
         )
-        changed = upd.filter(F.col("component") < F.col("old_component")).count()
-        labels = upd.select("node", "component")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
-        )
-    return labels
+
+    labels = sym.select(F.col("s").alias("node")).distinct().select(
+        "node", F.col("node").alias("component")
+    )
+    return iterate(
+        labels,
+        step,
+        max_iter,
+        until=lambda upd: upd.filter(F.col("component") < F.col("old_component")).count() == 0,
+    ).select("node", "component")
 
 
 def duplicate_clusters(
@@ -128,6 +121,55 @@ def duplicate_clusters(
     )
 
 
+def _rank_graph(
+    e: DataFrame, out_weight: Column, coef: Column
+) -> tuple[DataFrame, DataFrame]:
+    """The PageRank family's set-up over an (s, d, ...) edge list: the node
+    set (node) and the edges as (s, d, coef), where ``coef`` may read the
+    source's out-weight ``out_weight`` as column ``out``. All three are
+    checkpointed: every round re-reads them."""
+    e = e.localCheckpoint(eager=True)
+    nodes = (
+        e.select(F.col("s").alias("node"))
+        .union(e.select(F.col("d").alias("node")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    weighted = (
+        e.join(e.groupBy("s").agg(out_weight.alias("out")), "s")
+        .select("s", "d", coef.alias("coef"))
+        .localCheckpoint(eager=True)
+    )
+    return nodes, weighted
+
+
+def _propagate(
+    weighted: DataFrame,
+    base: DataFrame,
+    ranks: DataFrame,
+    contrib: Column,
+    update: Column,
+    n_iter: int,
+) -> DataFrame:
+    """``n_iter`` PageRank-family rounds from ``ranks`` (node, rank): each
+    edge of ``weighted`` (s, d, coef) sends ``contrib`` from its source,
+    the contributions are summed per destination as ``in_sum``, and every
+    node of ``base`` (node, ...) gets ``update`` as its new rank."""
+
+    def step(ranks: DataFrame) -> DataFrame:
+        sums = (
+            weighted.join(ranks, weighted["s"] == ranks["node"])
+            .select("d", contrib.alias("c"))
+            .groupBy("d")
+            .agg(F.sum("c").alias("in_sum"))
+        )
+        return base.join(sums, base["node"] == sums["d"], "left").select(
+            "node", update.alias("rank")
+        )
+
+    return iterate(ranks, step, n_iter)
+
+
 def pagerank(
     edges: DataFrame,
     src_col: str = "s",
@@ -151,46 +193,24 @@ def pagerank(
 
     Scale notes (100 TB): per iteration one shuffle of E on src (contrib
     join) and one on dst (partial-agg sum) — the canonical Pregel-free
-    formulation. The edge list and each iteration's ranks are eagerly
-    localCheckpoint-ed: lineage stays one-round deep, and the rank relation
-    is O(V) two narrow columns. High-in-degree hubs cost one hot reducer
-    key for a DOUBLE with map-side combine absorbing the fan-in. Like
-    connected_components, this EXECUTES jobs while building (checkpoint per
-    round); on a real cluster prefer reliable ``checkpoint``.
+    formulation; the rank relation is O(V) two narrow columns. High-in-degree
+    hubs cost one hot reducer key for a DOUBLE with map-side combine
+    absorbing the fan-in.
     """
-    e = edges.select(
-        F.col(src_col).alias("s"), F.col(dst_col).alias("d")
-    ).localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("s").alias("node"))
-        .union(e.select(F.col("d").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    nodes, weighted = _rank_graph(
+        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d")),
+        F.count(F.lit(1)),
+        F.col("out"),
     )
     n = nodes.count()
-    outdeg = e.groupBy("s").agg(F.count(F.lit(1)).alias("od"))
-    weighted = e.join(outdeg, "s").localCheckpoint(eager=True)  # (s, d, od)
-
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    base = (1.0 - damping) / n
-    for _ in range(n_iter):
-        contrib = (
-            weighted.join(ranks, weighted["s"] == ranks["node"])
-            .select(F.col("d"), (F.col("rank") / F.col("od")).alias("c"))
-            .groupBy("d")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        ranks = (
-            nodes.join(contrib, nodes["node"] == contrib["d"], "left")
-            .select(
-                "node",
-                (
-                    F.lit(base) + F.lit(damping) * F.coalesce("in_sum", F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks
+    return _propagate(
+        weighted,
+        nodes,
+        nodes.select("node", F.lit(1.0 / n).alias("rank")),
+        F.col("rank") / F.col("coef"),
+        F.lit((1.0 - damping) / n) + F.lit(damping) * F.coalesce("in_sum", F.lit(0.0)),
+        n_iter,
+    )
 
 
 def kcore(
@@ -214,20 +234,18 @@ def kcore(
 
     Scale: per round one degree aggregation (map-side combined) and two
     semi-joins of the edge list against the surviving-node set — all
-    keyed on uniform node ids; edge relation checkpointed per round so
-    lineage stays flat.
+    keyed on uniform node ids.
     """
-    e = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d")).localCheckpoint(
-        eager=True
-    )
-    for _ in range(n_rounds):
+
+    def peel(e: DataFrame) -> DataFrame:
         deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select("s")
-        e = (
-            e.join(keep, "s", "left_semi")
-            .join(keep.select(F.col("s").alias("d")), "d", "left_semi")
-            .localCheckpoint(eager=True)
+        return e.join(keep, "s", "left_semi").join(
+            keep.select(F.col("s").alias("d")), "d", "left_semi"
         )
+
+    e = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
+    e = iterate(e.localCheckpoint(eager=True), peel, n_rounds)
     return e.groupBy(F.col("s").alias("node")).agg(F.count(F.lit(1)).alias("degree"))
 
 
@@ -252,22 +270,12 @@ def ancestor_closure(
     the ENTIRE growing closure every round) is dead weight and is gone.
     Requires ``edges`` to carry one row per node (a forest's node has one
     parent; every caller passes a keyed projection of a base table).
-    Intermediate rounds are checkpointed (the kcore/pagerank contract);
-    the final round stays lazy — its single consumer aggregates it
-    directly. Roots are rows whose parent is NULL — they contribute no
-    edge.
+    Roots are rows whose parent is NULL — they contribute no edge.
     """
-    c = (
-        edges.filter(F.col(parent_col).isNotNull())
-        .select(
-            F.col(node_col).alias("node"),
-            F.col(parent_col).alias("anc"),
-            F.lit(1).cast("long").alias("_d"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    for k in range(n_rounds):
-        first = c.filter(F.col("_d") == (1 << k)).select(
+    spans = iter([1 << k for k in range(n_rounds)])  # 2^k, one per round
+
+    def double(c: DataFrame) -> DataFrame:
+        first = c.filter(F.col("_d") == next(spans)).select(
             "node", F.col("anc").alias("_mid"), F.col("_d").alias("_d1")
         )
         rest = c.select(
@@ -280,10 +288,14 @@ def ancestor_closure(
             F.col("_anc2").alias("anc"),
             (F.col("_d1") + F.col("_d2")).alias("_d"),
         )
-        c = c.union(longer)
-        if k < n_rounds - 1:
-            c = c.localCheckpoint(eager=True)
-    return c.select("node", "anc")
+        return c.union(longer)
+
+    c = edges.filter(F.col(parent_col).isNotNull()).select(
+        F.col(node_col).alias("node"),
+        F.col(parent_col).alias("anc"),
+        F.lit(1).cast("long").alias("_d"),
+    )
+    return iterate(c.localCheckpoint(eager=True), double, n_rounds).select("node", "anc")
 
 
 def weighted_pagerank(
@@ -297,51 +309,30 @@ def weighted_pagerank(
     """PageRank with edge weights: contributions split by weight share
     instead of 1/outdegree —
         rank(v) ← (1−d)/N + d · Σ_{(u,v)} rank(u) · w(u,v)/W(u)
-    where W(u) is u's total out-weight. Same fixed-iteration /
-    checkpoint-per-round contract as ``pagerank`` (the oracle chains
-    identical rounds); weight SHARES are rounded to 6dp once up front so
-    both engines propagate identical coefficients.
+    where W(u) is u's total out-weight. Same fixed-iteration contract as
+    ``pagerank`` (the oracle chains identical rounds); weight SHARES are
+    rounded to 6dp once up front so both engines propagate identical
+    coefficients.
 
-    Scale: identical shuffle profile to the unweighted operator — one
-    extra broadcast-sized nothing (the share is precomputed on the edge
-    relation itself).
+    Scale: identical shuffle profile to the unweighted operator (the share
+    is precomputed on the edge relation itself).
     """
-    e = edges.select(
-        F.col(src_col).alias("s"), F.col(dst_col).alias("d"), F.col(weight_col).alias("w")
-    ).localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("s").alias("node"))
-        .union(e.select(F.col("d").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    nodes, shared = _rank_graph(
+        edges.select(
+            F.col(src_col).alias("s"), F.col(dst_col).alias("d"), F.col(weight_col).alias("w")
+        ),
+        F.sum("w"),
+        F.round(F.col("w") / F.col("out"), 6),
     )
     n = nodes.count()
-    outw = e.groupBy("s").agg(F.sum("w").alias("tw"))
-    shared = (
-        e.join(outw, "s")
-        .select("s", "d", F.round(F.col("w") / F.col("tw"), 6).alias("share"))
-        .localCheckpoint(eager=True)
+    return _propagate(
+        shared,
+        nodes,
+        nodes.select("node", F.lit(1.0 / n).alias("rank")),
+        F.col("rank") * F.col("coef"),
+        F.lit((1.0 - damping) / n) + F.lit(damping) * F.coalesce("in_sum", F.lit(0.0)),
+        n_iter,
     )
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    base = (1.0 - damping) / n
-    for _ in range(n_iter):
-        contrib = (
-            shared.join(ranks, shared["s"] == ranks["node"])
-            .select(F.col("d"), (F.col("rank") * F.col("share")).alias("c"))
-            .groupBy("d")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        ranks = (
-            nodes.join(contrib, nodes["node"] == contrib["d"], "left")
-            .select(
-                "node",
-                (
-                    F.lit(base) + F.lit(damping) * F.coalesce("in_sum", F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks
 
 
 def bfs_distances(
@@ -377,15 +368,17 @@ def bfs_distances(
 
     because visited ∪ n1 is precisely every node with dist <= h — the same
     two sets two sequential one-hop rounds produce, so the invariant holds
-    entering round h+2. The count/max aggregate is the materialising job
-    for the round's LAZY checkpoint (first consumer, full scan — the same
-    one-job-per-round invariant as connected_components) and doubles as
-    the emptiness test; max(dist) distinguishes "closed at h" (n2 empty ⇒
-    no dist h+1 nodes exist ⇒ BFS complete) from "continue at h+2".
+    entering round h+2. The count/max aggregate is the convergence test
+    that materialises the round's lazy checkpoint (the ``caching.iterate``
+    converging-loop policy) and doubles as the emptiness test; max(dist)
+    distinguishes "closed at h" (n2 empty ⇒ no dist h+1 nodes exist ⇒ BFS
+    complete) from "continue at h+2".
+
+    This loop keeps its own checkpoint instead of ``caching.iterate``: its
+    state is two relations, the frontier and a growing union of visited
+    levels, and a hop cap that ends it is not a failure to converge.
     """
-    a = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-    b = edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d"))
-    sym = a.union(b).distinct().localCheckpoint(eager=True)
+    sym = _symmetrised(edges, src_col, dst_col)
 
     visited = sources.select("node").distinct().withColumn(
         "dist", F.lit(0).cast("long")
@@ -457,14 +450,26 @@ def label_propagation(
     Scale notes (100 TB): per round one shuffle of E on dst (label join),
     one grouped agg on (src, lbl) with map-side partials, and one per-src
     argmax window — all keyed on uniform node ids, label relation O(V).
-    Each round localCheckpoint-ed: lineage one round deep; prefer reliable
-    ``checkpoint`` on a real cluster.
     """
     e = edges.select(
         F.col(src_col).alias("s"),
         F.col(dst_col).alias("d"),
         F.col(weight_col).alias("w"),
     ).localCheckpoint(eager=True)
+    w_arg = Window.partitionBy("s").orderBy(F.desc("wsum"), F.asc("lbl"))
+
+    def step(labels: DataFrame) -> DataFrame:
+        nbr = (
+            e.join(labels.select(F.col("node").alias("d"), "lbl"), "d")
+            .groupBy("s", "lbl")
+            .agg(F.sum("w").alias("wsum"))
+        )
+        return (
+            nbr.withColumn("rn", F.row_number().over(w_arg))
+            .filter(F.col("rn") == 1)
+            .select(F.col("s").alias("node"), "lbl")
+        )
+
     labels = (
         e.select(F.col("s").alias("node"))
         .union(e.select(F.col("d").alias("node")))
@@ -472,22 +477,7 @@ def label_propagation(
         .select("node", F.col("node").alias("lbl"))
         .localCheckpoint(eager=True)
     )
-    w_arg = Window.partitionBy("s").orderBy(F.desc("wsum"), F.asc("lbl"))
-    for _ in range(n_rounds):
-        nbr = (
-            e.join(
-                labels.select(F.col("node").alias("d"), "lbl"), "d"
-            )
-            .groupBy("s", "lbl")
-            .agg(F.sum("w").alias("wsum"))
-        )
-        labels = (
-            nbr.withColumn("rn", F.row_number().over(w_arg))
-            .filter(F.col("rn") == 1)
-            .select(F.col("s").alias("node"), "lbl")
-            .localCheckpoint(eager=True)
-        )
-    return labels.select("node", F.col("lbl").alias("community"))
+    return iterate(labels, step, n_rounds).select("node", F.col("lbl").alias("community"))
 
 
 def hits(
@@ -510,43 +500,35 @@ def hits(
     DuckDB oracle chains the same n_iter algebraic steps with `//` and
     hash-matches after the 4dp round.
 
+    Each ``caching.iterate`` round is half an iteration, alternating the
+    authority and the hub update from hub_0 = 10⁶ everywhere; the last
+    round yields auth_n, and the hub scores are H(auth_n).
+
     Scale (100 TB): per iteration one shuffle of E on dst (auth partial
     agg) and one on src (hub partial agg) — same budget as ``pagerank``;
-    the 1-row max rides a broadcast; score relations are O(V) and eagerly
-    localCheckpoint-ed so lineage stays one round deep.
+    the 1-row max rides a broadcast; score relations are O(V).
     """
     e = edges.select(
         F.col(src_col).alias("s"), F.col(dst_col).alias("d")
     ).distinct().localCheckpoint(eager=True)
+
+    def rescaled(raw: DataFrame, key: str, score: str) -> DataFrame:
+        mx = raw.agg(F.max("raw").alias("mx"))
+        return raw.crossJoin(F.broadcast(mx)).select(
+            key,
+            F.expr("(raw * CAST(1000000 AS BIGINT)) div mx").cast("long").alias(score),
+        )
+
+    def authority(hub: DataFrame) -> DataFrame:
+        return rescaled(e.join(hub, "s").groupBy("d").agg(F.sum("h").alias("raw")), "d", "a")
+
+    def hubness(auth: DataFrame) -> DataFrame:
+        return rescaled(e.join(auth, "d").groupBy("s").agg(F.sum("a").alias("raw")), "s", "h")
+
+    halves = cycle((authority, hubness))  # auth_1, hub_1, auth_2, ...
     hub = e.select("s").distinct().select("s", F.lit(1000000).alias("h"))
-    auth = None
-    for _ in range(n_iter):
-        raw_a = (
-            e.join(hub, "s").groupBy("d").agg(F.sum("h").alias("ra"))
-        )
-        amax = raw_a.agg(F.max("ra").alias("mx"))
-        auth = (
-            raw_a.crossJoin(F.broadcast(amax))
-            .select(
-                "d",
-                F.expr("(ra * CAST(1000000 AS BIGINT)) div mx")
-                .cast("long")
-                .alias("a"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        raw_h = e.join(auth, "d").groupBy("s").agg(F.sum("a").alias("rh"))
-        hmax = raw_h.agg(F.max("rh").alias("mx"))
-        hub = (
-            raw_h.crossJoin(F.broadcast(hmax))
-            .select(
-                "s",
-                F.expr("(rh * CAST(1000000 AS BIGINT)) div mx")
-                .cast("long")
-                .alias("h"),
-            )
-            .localCheckpoint(eager=True)
-        )
+    auth = iterate(hub, lambda x: next(halves)(x), 2 * n_iter - 1)
+    hub = hubness(auth)
     # no 4dp ROUND here: micro-int/10⁶ already has ≤6 exact decimal digits
     # and rounding would land on .00005 half-boundaries (the q220 lesson)
     return hub.select(
@@ -581,68 +563,44 @@ def personalized_pagerank(
     (the q252 HITS device; a float rank sum over a high-in-degree hub
     would be summation-order sensitive). The tiny mass lost to floor
     division biases all scores identically and vanishes under the 4dp
-    output round.
+    output round. With no reachable seed there is no teleport mass and
+    every score is 0.
 
     Scale (100 TB): identical budget to ``pagerank`` — per iteration one
     shuffle of E on src and one partial-agg shuffle on dst; the seed set
-    is a broadcast; score relations O(V), localCheckpoint-ed per round.
+    is a broadcast; score relations O(V).
     """
     B = 1_000_000_000
-    e = edges.select(
-        F.col(src_col).alias("s"), F.col(dst_col).alias("d")
-    ).distinct().localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("s").alias("node"))
-        .union(e.select(F.col("d").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    nodes, weighted = _rank_graph(
+        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d")).distinct(),
+        F.count(F.lit(1)),
+        F.col("out"),
     )
     seed = seeds.select("node").distinct().join(nodes, "node", "left_semi")
-    n_seeds = seed.count()
-    if n_seeds == 0:
-        # no reachable seeds -> no teleport mass -> every score is 0
-        # (also covers an empty edge relation, whose node set is empty)
-        return nodes.select("node", F.lit(0.0).alias("score"))
-    outdeg = e.groupBy("s").agg(F.count(F.lit(1)).alias("od"))
-    weighted = e.join(outdeg, "s").localCheckpoint(eager=True)
+    teleport = ((100 - damping_pct) * B) // (100 * max(seed.count(), 1))
     base = nodes.join(
         seed.withColumn("is_seed", F.lit(1)), "node", "left"
     ).select(
         "node",
-        F.when(
-            F.col("is_seed").isNotNull(),
-            F.lit(((100 - damping_pct) * B) // (100 * n_seeds)).cast("long"),
-        )
+        F.when(F.col("is_seed").isNotNull(), F.lit(teleport).cast("long"))
         .otherwise(F.lit(0).cast("long"))
         .alias("b"),
     ).localCheckpoint(eager=True)
-    ranks = base.select("node", F.col("b").alias("r"))
-    for _ in range(n_iter):
-        contrib = (
-            weighted.join(ranks, weighted["s"] == ranks["node"])
-            .select("d", F.expr("r div od").cast("long").alias("c"))
-            .groupBy("d")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        ranks = (
-            base.join(contrib, base["node"] == contrib["d"], "left")
-            .select(
-                "node",
-                (
-                    F.col("b")
-                    + F.expr(
-                        f"(CAST({damping_pct} AS BIGINT)"
-                        " * coalesce(in_sum, CAST(0 AS BIGINT))) div 100"
-                    )
-                )
-                .cast("long")
-                .alias("r"),
+    ranks = _propagate(
+        weighted,
+        base,
+        base.select("node", F.col("b").alias("rank")),
+        F.expr("rank div coef").cast("long"),
+        (
+            F.col("b")
+            + F.expr(
+                f"(CAST({damping_pct} AS BIGINT)"
+                " * coalesce(in_sum, CAST(0 AS BIGINT))) div 100"
             )
-            .localCheckpoint(eager=True)
-        )
-    return ranks.select(
-        "node", (F.col("r") / float(B)).alias("score")
+        ).cast("long"),
+        n_iter,
     )
+    return ranks.select("node", (F.col("rank") / float(B)).alias("score"))
 
 
 def removal_effect_attribution(

@@ -624,9 +624,10 @@ def kmeans_assignments(
     Scale: assignment is zero-shuffle (centroids packed into ONE
     broadcast row, scored in codegen — the cell_assignments shape);
     the update is one map-side-combined groupBy(cluster) over 64 avg
-    aggregates. Centroid relations are k rows — localCheckpoint per
-    round keeps lineage flat without ever collecting vectors.
+    aggregates. Centroid relations are k rows, checkpointed per round by
+    ``caching.iterate`` without ever collecting vectors.
     """
+    from ..caching import iterate
     from .similarity import _d2
 
     vd = vectors.select(
@@ -662,10 +663,10 @@ def kmeans_assignments(
             )
         )
 
-    for _ in range(n_iter):
-        assigned = assign(centroids)
-        centroids = (
-            assigned.groupBy("cluster")
+    def update(cents: DataFrame) -> DataFrame:
+        return (
+            assign(cents)
+            .groupBy("cluster")
             .agg(
                 F.array(
                     *[
@@ -675,6 +676,6 @@ def kmeans_assignments(
                 ).alias("cvec")
             )
             .select(F.col("cluster").alias("cid"), "cvec")
-            .localCheckpoint(eager=True)
         )
-    return assign(centroids).select(id_col, "cluster")
+
+    return assign(iterate(centroids, update, n_iter)).select(id_col, "cluster")

@@ -92,9 +92,11 @@ def q51_guid_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("o_orderkey", "synth_round", "user_id", "guid")
 
 
-# q52 constants: city index from parts < 400 (every p_name token is a city
-# name/alt-name), towns to resolve from parts 400-799 (second token, with a
-# per-row delimiter treatment), manual map = every 50th town → 'MM'.
+# q52 constants: city index from the even parts < 800 (every p_name token
+# is a city name/alt-name), towns to resolve from the odd parts < 800
+# (second token, with a per-row delimiter treatment), manual map = the towns
+# with id % 50 = 1 → 'MM'. A parity split, so every scale factor has both
+# cities and towns (sf0.001's part table has 200 rows).
 
 
 @register(
@@ -105,23 +107,23 @@ WITH cities AS (
            'C' || CAST(p_partkey % 25 AS VARCHAR) AS countrycode,
            p_size * 1000 + p_partkey AS population,
            UNNEST(LIST_DISTINCT(STRING_SPLIT(p_name, ' '))) AS name_lc
-    FROM part WHERE p_partkey < 400
+    FROM part WHERE p_partkey < 800 AND p_partkey % 2 = 0
 ),
 towns AS (
     SELECT p_partkey AS town_id,
-           CASE p_partkey % 4
-               WHEN 0 THEN t2
-               WHEN 1 THEN t2 || ', Xx'
-               WHEN 2 THEN t2 || ' - Yy'
+           CASE p_partkey % 8
+               WHEN 1 THEN t2
+               WHEN 3 THEN t2 || ', Xx'
+               WHEN 5 THEN t2 || ' - Yy'
                ELSE 'zz. ' || t2
            END AS town
     FROM (
         SELECT p_partkey, STRING_SPLIT(p_name, ' ')[2] AS t2
-        FROM part WHERE p_partkey BETWEEN 400 AND 799
+        FROM part WHERE p_partkey < 800 AND p_partkey % 2 = 1
     ) t
 ),
 manual AS (
-    SELECT DISTINCT town, 'MM' AS m_code FROM towns WHERE town_id % 50 = 0
+    SELECT DISTINCT town, 'MM' AS m_code FROM towns WHERE town_id % 50 = 1
 ),
 exact AS (
     SELECT town_id, countrycode AS exact_code FROM (
@@ -195,7 +197,9 @@ def q52_city_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     part = load_table(spark, sf_dir, "part")
     toks = F.array_distinct(F.split(F.col("p_name"), " "))
-    cities = part.filter(F.col("p_partkey") < 400).select(
+    cities = part.filter(
+        (F.col("p_partkey") < 800) & (F.col("p_partkey") % 2 == 0)
+    ).select(
         F.col("p_partkey").alias("city_id"),
         F.concat(F.lit("C"), (F.col("p_partkey") % 25).cast("string")).alias(
             "countrycode"
@@ -205,17 +209,17 @@ def q52_city_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t2 = F.element_at(F.split(F.col("p_name"), " "), 2)
     towns = part.filter(
-        (F.col("p_partkey") >= 400) & (F.col("p_partkey") <= 799)
+        (F.col("p_partkey") < 800) & (F.col("p_partkey") % 2 == 1)
     ).select(
         F.col("p_partkey").alias("town_id"),
-        F.when(F.col("p_partkey") % 4 == 0, t2)
-        .when(F.col("p_partkey") % 4 == 1, F.concat(t2, F.lit(", Xx")))
-        .when(F.col("p_partkey") % 4 == 2, F.concat(t2, F.lit(" - Yy")))
+        F.when(F.col("p_partkey") % 8 == 1, t2)
+        .when(F.col("p_partkey") % 8 == 3, F.concat(t2, F.lit(", Xx")))
+        .when(F.col("p_partkey") % 8 == 5, F.concat(t2, F.lit(" - Yy")))
         .otherwise(F.concat(F.lit("zz. "), t2))
         .alias("town"),
     )
     manual = (
-        towns.filter(F.col("town_id") % 50 == 0)
+        towns.filter(F.col("town_id") % 50 == 1)
         .select(
             F.col("town").alias("home_institution_town"), F.lit("MM").alias("m_code")
         )

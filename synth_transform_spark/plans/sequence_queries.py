@@ -1594,8 +1594,9 @@ def q303_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the 5 greedy steps as MATERIALIZED CTEs (the q270 device).
 # Scale: the (source, token) distinct relation is the only corpus-sized
 # object (one keyed distinct); each greedy step is one anti-join + one
-# per-source count over it - 5 fixed rounds, no driver state beyond the
-# picked source ids.
+# per-source count over it - at most 5 rounds of ``caching.iterate``,
+# whose convergence test is the covered-set count, no driver state beyond
+# the picked source ids.
 # --------------------------------------------------------------------------
 _Q308_K = 5
 
@@ -1663,7 +1664,7 @@ ORDER BY step
 def q308_greedy_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy 5-source maximum vocabulary coverage:
     (step, source, new_tokens, covered_total)."""
-    from ..caching import persist_tracked
+    from ..caching import iterate, persist_tracked
 
     docs = load_table(spark, sf_dir, "documents")
     w = F.filter(F.split("text", " "), lambda t: t != "")
@@ -1683,8 +1684,8 @@ def q308_greedy_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     picked: list[str] = []
     out = []
-    covered = st.filter(F.lit(False)).select("tok")
-    for step in range(1, _Q308_K + 1):
+
+    def pick(covered: DataFrame) -> bool:
         gains = (
             st.filter(~F.col("source").isin(picked) if picked else F.lit(True))
             .join(covered, "tok", "left_anti")
@@ -1694,14 +1695,24 @@ def q308_greedy_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(1)
             .collect()
         )
-        if not gains:  # every remaining source adds zero coverage - the
-            break      # oracle's sel CTE goes empty at the same step
-        src, gain = gains[0]["source"], gains[0]["gain"]
-        picked.append(src)
-        covered = (
-            st.filter(F.col("source").isin(picked)).select("tok").distinct()
-        ).localCheckpoint(eager=True)
-        out.append((step, src, gain, covered.count()))
+        if gains:  # else every remaining source adds zero coverage - the
+            # oracle's sel CTE goes empty at the same step
+            picked.append(gains[0]["source"])
+            out.append((len(picked), gains[0]["source"], gains[0]["gain"]))
+        return bool(gains)
+
+    def counted(covered: DataFrame) -> bool:
+        out[-1] += (covered.count(),)
+        return len(picked) == _Q308_K or not pick(covered)
+
+    empty = st.filter(F.lit(False)).select("tok")
+    if pick(empty):
+        iterate(
+            empty,
+            lambda _: st.filter(F.col("source").isin(picked)).select("tok").distinct(),
+            _Q308_K,
+            until=counted,
+        )
     return spark.createDataFrame(
         out, "step long, source string, new_tokens long, covered_total long"
     ).orderBy("step")

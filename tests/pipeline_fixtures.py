@@ -21,10 +21,10 @@ def _df(spark, schema, rows):
     return spark.createDataFrame(rows, schema)
 
 
-def build_sources(spark, parent_mismatch: bool = False):
-    """Union-of-rounds source tables (disjoint id spaces: round*100+i)."""
-    calls = _df(
-        spark,
+def source_rows(parent_mismatch: bool = False) -> dict[str, tuple[str, list]]:
+    """Union-of-rounds source tables (disjoint id spaces: round*100+i), as
+    {name: (DDL schema, rows)}."""
+    calls = (
         "synth_round int, callID int, call int, dateOpen timestamp, dateClosed timestamp",
         [
             (1, 101, 1, D(2004, 1, 1), D(2004, 6, 30)),
@@ -39,8 +39,7 @@ def build_sources(spark, parent_mismatch: bool = False):
             (4, 402, 2, D(2013, 7, 1), D(2013, 12, 31)),
         ],
     )
-    disciplines = _df(
-        spark,
+    disciplines = (
         "synth_round int, DisciplineID int, DisciplineName string",
         [
             (r, i, n)
@@ -56,23 +55,19 @@ def build_sources(spark, parent_mismatch: bool = False):
     ]
     if parent_mismatch:
         sd_rows.append((2, 202, "Entomology", 3))  # same name, different parent
-    specific_disciplines = _df(
-        spark,
+    specific_disciplines = (
         "synth_round int, SpecificDisciplineID int, SpecificDisciplineName string, DisciplineID int",
         sd_rows,
     )
-    output_types = _df(
-        spark,
+    output_types = (
         "synth_round int, OutputType_ID int, OutputType string",
         [(r, i, n) for r in (1, 2, 3, 4) for i, n in [(1, "Journal"), (2, "Thesis")]],
     )
-    pub_statuses = _df(
-        spark,
+    pub_statuses = (
         "synth_round int, PublicationStatus_ID int, PublicationStatus string",
         [(r, i, n) for r in (1, 2, 3, 4) for i, n in [(1, "Published"), (2, "In Press")]],
     )
-    outputs = _df(
-        spark,
+    outputs = (
         "synth_round int, Output_ID int, User_ID int, OutputType_ID int, "
         "Authors string, Year string, Title string, Publisher string, URL string, "
         "Volume string, Pages string, Conference string, Degree string, "
@@ -95,8 +90,7 @@ def build_sources(spark, parent_mismatch: bool = False):
             (4, 401, 4001, 1, None, None, None, None, None, None, None, None, None, 1),
         ],
     )
-    users = _df(
-        spark,
+    users = (
         "synth_round int, User_ID int, Gender string, Researcher_status string, "
         "Nationality_Country_code string, Nationality_OtherText string, "
         "Discipline1 int, Discipline2 int, Discipline3 int, "
@@ -129,8 +123,7 @@ def build_sources(spark, parent_mismatch: bool = False):
              "Inst X", "Nowhereville", None, None, 1, 2, "no", "no", "Ms"),
         ],
     )
-    projects = _df(
-        spark,
+    projects = (
         "synth_round int, UserProject_ID int, User_ID int, UserProject_Title string, "
         "UserProject_Objectives string, UserProject_Achievements string, "
         "UserProject_Summary string, UserProject_Background string, "
@@ -184,8 +177,7 @@ def build_sources(spark, parent_mismatch: bool = False):
              "submitted", None, None, None, None, None, "", 1, None, "1"),
         ],
     )
-    scores = _df(
-        spark,
+    scores = (
         "synth_round int, PK_App_Score_ID int, UserProject_ID int, TAF_Scorer_ID int, "
         "Methodology_Score double, Research_Excellence_Score double, "
         "Support_Stmt_Score double, Justification_Score double, "
@@ -223,12 +215,74 @@ def build_sources(spark, parent_mismatch: bool = False):
     }
 
 
+def build_sources(spark, parent_mismatch: bool = False):
+    """``source_rows`` as DataFrames."""
+    return {
+        name: _df(spark, schema, rows)
+        for name, (schema, rows) in source_rows(parent_mismatch).items()
+    }
+
+
 USERS_CSV = """GUID,synth1,synth3,synth4,synth2,"synth round 1 age","synth round 2 age","synth round 3 age","synth round 4 age"
 -636396585,"1001,1002",,,,25-34,,,
 77001,,3001,,2001,,25-34,35-44,
 88001,,,"4001,4002",,,,,45-54
 99001,,,4003,,,,,25-34
 """
+
+
+MASTER_CLEAN = {"NHM London": "Natural History Museum", "Junk Inst": "nil"}
+UNMATCHED_TOWNS = {"Islamabad": "PK"}
+
+
+def resource_rows() -> dict[str, tuple[str, list]]:
+    """The resource tables that are plain rows, as {field: (DDL schema,
+    rows)}; the two JSON maps as ``load_json_map`` reads them."""
+    return {
+        "master_clean": ("dirty string, clean string", list(MASTER_CLEAN.items())),
+        "unmatched_towns": ("town string, country_code string", list(UNMATCHED_TOWNS.items())),
+        "output_dois": (
+            "synth_round int, output_id int, doi string",
+            [
+                (1, 101, "10.1234/ABC.1"),
+                (2, 201, "10.1234/ABC.1"),  # shared DOI (duplicates trap)
+                (3, 301, "10.5555/XYZ.2"),  # cached DOI without metadata
+                (3, 999, "10.9999/NOPE"),  # key not present in outputs → skipped
+            ],
+        ),
+        "doi_metadata": (
+            "doi string, m_author array<struct<given:string,family:string>>, "
+            "m_title array<string>, m_created string, m_publisher string, "
+            "m_url string, m_volume string, m_page string",
+            [
+                (
+                    "10.1234/ABC.1",
+                    [
+                        {"given": "Jane", "family": "Smith"},
+                        {"given": None, "family": "Solo"},  # skipped (missing given)
+                    ],
+                    ["The <b>Real</b>  Title"],
+                    "2005-03-01T00:00:00Z",
+                    "RealPub",
+                    "https://doi.org/10.1234/abc.1",
+                    "42",
+                    "100-110",
+                ),
+            ],
+        ),
+        "countries": (
+            "code string, name string",
+            [
+                ("BD", "Bangladesh"),
+                ("DE", "Germany"),
+                ("FR", "France"),
+                ("GB", "United Kingdom"),
+                ("PK", "Pakistan"),
+                ("RU", "Russia"),
+                ("US", "United States"),
+            ],
+        ),
+    }
 
 
 def build_resources(spark, tmpdir, duplicate_guid: bool = False) -> Resources:
@@ -243,14 +297,12 @@ def build_resources(spark, tmpdir, duplicate_guid: bool = False) -> Resources:
 
     mc_path = os.path.join(tmpdir, "master_clean.json")
     with open(mc_path, "w") as f:
-        json.dump(
-            {"NHM London": "Natural History Museum", "Junk Inst": "nil"}, f
-        )
+        json.dump(MASTER_CLEAN, f)
     master_clean = load_json_map(spark, mc_path, "dirty", "clean")
 
     ut_path = os.path.join(tmpdir, "unmatched_home_institutions.json")
     with open(ut_path, "w") as f:
-        json.dump({"Islamabad": "PK"}, f)
+        json.dump(UNMATCHED_TOWNS, f)
     unmatched = load_json_map(spark, ut_path, "town", "country_code")
 
     wb_dir = os.path.join(tmpdir, "access_request_rebuild")
@@ -278,37 +330,8 @@ def build_resources(spark, tmpdir, duplicate_guid: bool = False) -> Resources:
         # dropped project 210 → NULL visitor_project_id
         f.write("4,210,2,2,2,ghost\n")
     workbook = load_workbook(spark, wb_dir)
+    rows = resource_rows()
 
-    output_dois = _df(
-        spark,
-        "synth_round int, output_id int, doi string",
-        [
-            (1, 101, "10.1234/ABC.1"),
-            (2, 201, "10.1234/ABC.1"),  # shared DOI (duplicates trap)
-            (3, 301, "10.5555/XYZ.2"),  # cached DOI without metadata
-            (3, 999, "10.9999/NOPE"),  # key not present in outputs → skipped
-        ],
-    )
-    doi_metadata = spark.createDataFrame(
-        [
-            (
-                "10.1234/ABC.1",
-                [
-                    {"given": "Jane", "family": "Smith"},
-                    {"given": None, "family": "Solo"},  # skipped (missing given)
-                ],
-                ["The <b>Real</b>  Title"],
-                "2005-03-01T00:00:00Z",
-                "RealPub",
-                "https://doi.org/10.1234/abc.1",
-                "42",
-                "100-110",
-            ),
-        ],
-        "doi string, m_author array<struct<given:string,family:string>>, "
-        "m_title array<string>, m_created string, m_publisher string, "
-        "m_url string, m_volume string, m_page string",
-    )
     cities = spark.createDataFrame(
         [
             ("London", "GB", 9000000, []),
@@ -324,26 +347,14 @@ def build_resources(spark, tmpdir, duplicate_guid: bool = False) -> Resources:
     )
     from synth_transform_spark.pipeline.resources import city_name_index
 
-    countries = spark.createDataFrame(
-        [
-            ("BD", "Bangladesh"),
-            ("DE", "Germany"),
-            ("FR", "France"),
-            ("GB", "United Kingdom"),
-            ("PK", "Pakistan"),
-            ("RU", "Russia"),
-            ("US", "United States"),
-        ],
-        "code string, name string",
-    )
     return Resources(
         user_ids=user_ids,
         user_ages=user_ages,
         master_clean=master_clean,
         unmatched_towns=unmatched,
         workbook=workbook,
-        output_dois=output_dois,
-        doi_metadata=doi_metadata,
+        output_dois=_df(spark, *rows["output_dois"]),
+        doi_metadata=_df(spark, *rows["doi_metadata"]),
         city_names=city_name_index(cities),
-        countries=countries,
+        countries=_df(spark, *rows["countries"]),
     )

@@ -469,3 +469,20 @@ class TestAdviceRegressionFixes:
         ).first()
         assert row.lit_n == 1
         assert row.raw_n == 3  # documents the divergence the escape prevents
+
+    def test_q52_resolves_towns_at_test_scale(self, spark, oracle_con):
+        # Cities and towns come from a part-key parity split, so the tests'
+        # sf0.001 (200 parts) has both: the oracle comparison is not two
+        # empty frames, and the manual-map ('MM') and exact (undelimited
+        # town) stages each resolve a town.
+        from conftest import SF_DIR
+        from synth_transform_spark.plans import REGISTRY
+        from synth_transform_spark.testing import compare
+
+        q = REGISTRY["q52_city_resolution"]
+        got = q.spark(spark, SF_DIR).toPandas()
+        assert len(got) > 0
+        assert compare(got, oracle_con.execute(q.oracle).df()).ok
+        assert (got.country_code == "MM").any()
+        undelimited = ~got.town.str.contains(", | - |\\. ", regex=True)
+        assert (undelimited & (got.country_code != "MM")).any()

@@ -1,4 +1,5 @@
-"""connected_components / duplicate_clusters (operators/graph.py).
+"""connected_components / duplicate_clusters and the other graph operators
+(operators/graph.py), and the job cost of their `caching.iterate` rounds.
 
 Shapes a near-dup pair graph actually produces: cliques (LSH bucket),
 chains (A~B~C where A!~C — the transitive-closure case exact grouping
@@ -236,3 +237,44 @@ def test_bfs_two_hop_round_internals(spark):
     )
     gotc = {r.node: r.dist for r in bfs_distances(cyc, src, max_hops=8).collect()}
     assert gotc == {1: 0, 2: 1, 4: 1, 3: 2}
+
+
+def _jobs(spark, build) -> int:
+    """Spark jobs run by building ``build()`` and writing it to the noop
+    sink, counted by the DAG scheduler's next job id (no UI retention
+    limit can truncate it)."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = dag.nextJobId()
+    build().write.format("noop").mode("overwrite").save()
+    return dag.nextJobId() - j0
+
+
+def test_fixed_round_loop_jobs_per_round(spark):
+    # One more pagerank round is one more eager checkpoint of a round's
+    # adaptive plan: a job per shuffle/broadcast stage plus one, 7 here.
+    from synth_transform_spark.operators.graph import pagerank
+
+    rng = random.Random(7)
+    edges = spark.createDataFrame(
+        [(rng.randrange(300), rng.randrange(300)) for _ in range(2000)], "s long, d long"
+    )
+    two, three = (_jobs(spark, lambda: pagerank(edges, n_iter=n)) for n in (2, 3))
+    assert three - two == 7
+
+
+def test_converging_loop_jobs_per_round(spark):
+    # A chain one node longer needs one more min-label round; its lazy
+    # checkpoint is materialised by the convergence count: 7 jobs a round.
+    def chain(n):
+        return spark.createDataFrame(
+            [(i, i + 1) for i in range(1, n)], "id_a long, id_b long"
+        )
+
+    four, five = (_jobs(spark, lambda: connected_components(chain(n))) for n in (4, 5))
+    assert five - four == 7
+
+
+def test_round_cap_without_convergence_raises(spark):
+    edges = spark.createDataFrame([(i, i + 1) for i in range(1, 10)], "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        connected_components(edges, max_iter=2)
