@@ -22,6 +22,8 @@ import sys
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .pipeline.resources import WORKBOOK_SHEETS
+
 SOURCE_TABLES = (
     "NHM_Call",
     "NHM_Disciplines",
@@ -45,7 +47,6 @@ RESOURCE_TABLES = (
     "countries",
 )
 
-WORKBOOK_SHEETS = ("Category", "Institution", "InstallationFacility", "AccessRequest")
 
 
 def _spark(app: str) -> SparkSession:

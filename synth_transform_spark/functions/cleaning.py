@@ -2,14 +2,13 @@
 
 Re-expressions of /root/reference/synth/utils.py:56-124 as composable Column
 expressions (SURVEY.md §2.8 F1/F2/F4). Everything is JVM-side regexp for the
-relational scale path. Three F1 HTML-strip tiers:
+relational scale path. Two F1 HTML-strip tiers:
 
 1. clean_string — JVM regex approximation (scale default, plan-linted);
-2. clean_string_html_stdlib — stdlib html.parser pandas UDF, reference-exact
-   on the whole golden corpus, NO import gate (works in every container);
-3. clean_string_html_exact — bs4(+lxml) pandas UDF, gated on bs4 being
-   installed (raises ImportError cleanly here), for byte-identical parity
-   with the reference's parser stack.
+2. clean_string_html_stdlib — stdlib html.parser pandas UDF, matching the
+   reference's bs4+lxml output on the golden corpus
+   (tests/html_strip_goldens.py) with no optional dependency; its known
+   divergences are pinned in tests/test_functions.py.
 """
 
 from __future__ import annotations
@@ -31,9 +30,8 @@ def clean_string(col: Column) -> Column:
 
     HTML stripping here is the regex approximation ``<[^>]+>`` → '' (the
     reference uses BeautifulSoup text extraction; divergence only on
-    malformed markup/entities — all 8 known divergences are closed by
-    clean_string_html_stdlib, the gate-free exactness path; the bs4 UDF
-    clean_string_html_exact remains for lxml-identical parity).
+    malformed markup/entities — all 8 annotated divergences of the golden
+    corpus are closed by clean_string_html_stdlib).
     """
     c = F.regexp_replace(col, r"[\r\n\t]+", " ")
     c = F.regexp_replace(c, r"<[^>]+>", "")
@@ -47,8 +45,8 @@ def clean_string(col: Column) -> Column:
 
 
 def clean_string_html_stdlib(col: Column) -> Column:
-    """F1 with reference-exact HTML text extraction via the stdlib
-    ``html.parser`` — available in EVERY container (no bs4/lxml gate).
+    """F1 with HTML text extraction via the stdlib ``html.parser`` (no
+    bs4/lxml dependency).
 
     Closes all 8 annotated regex-path divergences in the golden corpus
     (tests/html_strip_goldens.py): bare ``<``/``>`` next to spaces or
@@ -58,6 +56,9 @@ def clean_string_html_stdlib(col: Column) -> Column:
     bodies are kept — the same outputs the reference's
     BeautifulSoup(..., 'lxml').get_text() chain produces
     (/root/reference/synth/utils.py:69-87) on every pinned case.
+    Outside that corpus it is not byte-identical to bs4: a ``<`` + letter
+    with no closing ``>`` (``"a <b things"``) stays text here, where bs4
+    drops the rest of the string (pinned in tests/test_functions.py).
 
     Arrow-batched pandas UDF: this is the ACCURACY path for
     document-cleaning stages; the JVM regex path (clean_string) remains
@@ -91,45 +92,6 @@ def clean_string_html_stdlib(col: Column) -> Column:
             p.close()
             v = "".join(p.parts)
             v = v.replace("\xa0", " ")
-            v = re.sub(r"^\s+", "", re.sub(r"\s{2,}", " ", v))
-            return v if re.search(r"\w", v) else None
-
-        return s.map(one)
-
-    return _clean(col)
-
-
-def clean_string_html_exact(col: Column) -> Column:
-    """F1 with bs4-exact HTML text extraction (pandas UDF). Requires bs4;
-    raises ImportError at plan-build time if unavailable."""
-    import bs4  # noqa: F401  (gate: container may not ship bs4)
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import StringType
-
-    @pandas_udf(StringType())
-    def _clean(s):
-        import re
-
-        from bs4 import BeautifulSoup
-
-        # The reference parses with lxml (utils.py:84) — malformed-markup
-        # recovery differs between parsers, so only fall back to the
-        # stdlib parser when lxml is absent.
-        try:
-            import lxml  # noqa: F401
-
-            parser = "lxml"
-        except ImportError:
-            parser = "html.parser"
-
-        def one(v):
-            if v is None:
-                return None
-            v = re.sub(r"[\r\n\t]+", " ", v)
-            if len(v) == 0:
-                return None
-            v = BeautifulSoup(v, parser).get_text()
-            v = v.replace(" ", " ")
             v = re.sub(r"^\s+", "", re.sub(r"\s{2,}", " ", v))
             return v if re.search(r"\w", v) else None
 

@@ -4,18 +4,18 @@ Reference: /root/reference/notebooks/outliers.ipynb cell 3 — lowercase,
 ``[^a-z- ]`` → space, ``\\s-\\s`` → space, spaCy POS filter (NOUN/ADJ,
 lemma length > 1), PorterStemmer on each surviving token.
 
-Parity tiers:
+Pieces:
 
 - ``porter_stem``: pure-Python implementation of the ORIGINAL Porter (1980)
   algorithm — no NLTK dependency. NLTK's PorterStemmer defaults to its
   NLTK_EXTENSIONS mode which deviates from the paper on a small word set
   (pooled irregulars, a few rule tweaks); the divergence is documented here
   and the goldens pin the paper's own examples.
-- ``tokens_stemmed_udf``: notebook cleaning regexes + Porter, no POS filter
-  (spaCy is absent in this container) — the always-available middle tier.
-- ``tokens_pos_stemmed_udf``: the exact notebook chain including the spaCy
-  NOUN/ADJ filter; import-gated, raises cleanly where spaCy is missing
-  (same pattern as cleaning.clean_string_html_exact).
+- ``tokens_stemmed_udf``: notebook cleaning regexes + Porter, no POS filter.
+- ``pos_keep_approx`` / ``tokenize_notebook_pos_approx`` /
+  ``pos_filtered_tokens_col``: a deterministic stand-in for the spaCy
+  NOUN/ADJ filter (spaCy is not a dependency), its divergence pinned in
+  tests/test_pos_approx.py.
 
 The regex tokeniser (operators/ml.tokens_col) remains the default scale
 path: it is pure Catalyst, whereas stemming is inherently per-token Python.
@@ -198,14 +198,13 @@ def tokens_stemmed_udf():
 # Deterministic POS approximation (round-10 verdict #6).
 #
 # The reference keeps only spaCy NOUN/ADJ tokens before stemming
-# (outliers.ipynb cell 3). spaCy is environment-gated here, so this is a
+# (outliers.ipynb cell 3). spaCy is not a dependency here, so this is a
 # closed-class-exclusion approximation: English function words (DET/ADP/
 # PRON/CONJ/AUX/PART — closed classes, enumerable), frequent title verbs,
 # and ``-ly`` adverbs are DROPPED; everything else (the open classes, which
 # in scholarly titles are overwhelmingly nouns/adjectives) is KEPT.
 # Divergence vs a hand-annotated NOUN/ADJ gold corpus is measured and
-# pinned in tests/test_pos_approx.py; the exact spaCy chain stays available
-# behind the gate (tokens_pos_stemmed_udf).
+# pinned in tests/test_pos_approx.py.
 # ---------------------------------------------------------------------------
 # NOTE deliberately absent: 'new', 'old', ordinals, 'same', 'several' —
 # spaCy tags them ADJ and the reference's filter keeps them.
@@ -277,24 +276,11 @@ def tokenize_notebook_pos_approx(text: str | None) -> list[str]:
     return [porter_stem(t_) for t_ in t.split() if pos_keep_approx(t_)]
 
 
-def tokens_pos_approx_udf():
-    """pandas UDF: notebook cleaning + POS approximation + Porter."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, StringType
-
-    @pandas_udf(ArrayType(StringType()))
-    def _tok(s: pd.Series) -> pd.Series:
-        return s.map(tokenize_notebook_pos_approx)
-
-    return _tok
-
-
 def pos_filtered_tokens_col(text_col):
     """JVM-side Column twin of the approximation for relational paths:
     the stoplists are literal arrays inside whole-stage codegen — no
-    Python worker. Porter stemming is NOT applied here (the stemmer is
-    the declared Python stage); compose with the UDFs when stems are
-    needed."""
+    Python worker. Porter stemming is NOT applied here (porter_stem is
+    the declared Python stage)."""
     import pyspark.sql.functions as F
 
     cleaned = F.regexp_replace(F.lower(text_col), r"[^a-z\- ]", " ")
@@ -308,36 +294,3 @@ def pos_filtered_tokens_col(text_col):
         & ~t.isin(*drop)
         & (~t.endswith("ly") | t.isin(*ly_keep)),
     )
-
-
-def tokens_pos_stemmed_udf(model: str = "en_core_web_sm"):
-    """pandas UDF: the EXACT notebook chain incl. spaCy NOUN/ADJ filtering
-    and the lemma length > 1 gate. Requires spaCy + the model; raises
-    ImportError at plan-build time where they are absent (gated, like
-    cleaning.clean_string_html_exact)."""
-    import spacy  # noqa: F401  (gate: container may not ship spaCy)
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, StringType
-
-    @pandas_udf(ArrayType(StringType()))
-    def _tok(s: pd.Series) -> pd.Series:
-        import re
-
-        import spacy
-
-        nlp = spacy.load(model, disable=["ner", "parser"])
-
-        def one(text):
-            if text is None:
-                return []
-            t = re.sub(r"[^a-z- ]", " ", text.lower())
-            t = re.sub(r"\s-\s", " ", t)
-            return [
-                porter_stem(tok.text)
-                for tok in nlp(t)
-                if tok.pos_ in ("NOUN", "ADJ") and len(tok.lemma_) > 1
-            ]
-
-        return s.map(one)
-
-    return _tok

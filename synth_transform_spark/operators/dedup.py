@@ -3,14 +3,16 @@
 Four families, all expressed as DataFrame pipelines (no Python row loops):
 
 - exact          — hash-groupBy on a normalised fingerprint (one shuffle).
-- minhash + LSH  — shingle → 12-permutation MinHash → 4 banded buckets →
+- minhash + LSH  — shingle → 12-permutation linear MinHash
+                   (``minhash_signatures_linear``) → 4 banded buckets →
                    per-bucket member arrays (groupBy collect_list, guarded
                    by a pre-collect spillable window count) → in-row pair
                    expansion → exact Jaccard verify. The scale path:
                    candidate generation touches only docs sharing a band
                    key, never the O(n²) pair space.
-- n-gram Jaccard — exact verification used standalone at small scale or as
-                   the verify stage after LSH.
+- n-gram Jaccard — exact array-form verification (``jaccard_verify_arrays``)
+                   used standalone at small scale or as the verify stage
+                   after LSH.
 - SimHash        — 60-bit weighted-token signature; hamming-adjacent bucket
                    grouping (exact-signature grouping here; banded variants
                    are a trivial extension).
@@ -21,7 +23,8 @@ join (SURVEY.md §2.3 J13, /root/reference/synth/resources.py:278-331) are the
 reference's only dedup/similarity surfaces; MinHash/SimHash generalise them to
 corpus scale per the north-star extensions.
 
-Determinism: every hash is md5 over an explicit string encoding, so results
+Determinism: every hash derives from md5 over an explicit string encoding
+(MinHash: one md5 per shingle, then integer permutations), so results
 are reproducible across engines (the DuckDB oracle mirrors the same formulas)
 and across cluster sizes — no seed-dependent JVM hashing in the signatures.
 
@@ -148,47 +151,6 @@ def shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n:
     )
 
 
-def minhash_signatures(sh: DataFrame, id_col: str = "doc_id", n_perms: int = N_PERMS) -> DataFrame:
-    """MinHash signature per doc from exploded shingles (groupBy form).
-
-    h_i = min(md5(i || '|' || shingle)); md5-as-permutation keeps the
-    signature engine-portable and cluster-stable. Prefer
-    ``minhash_signatures_arrays`` when shingles are already in array form —
-    it computes the same values with no shuffle at all.
-    """
-    mins = [
-        F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("shingle")))).alias(f"h{i}")
-        for i in range(n_perms)
-    ]
-    return sh.groupBy(id_col).agg(*mins)
-
-
-def minhash_signatures_arrays(
-    doc_sh: DataFrame, id_col: str = "doc_id", n_perms: int = N_PERMS
-) -> DataFrame:
-    """MinHash signatures as a narrow map over per-doc shingle arrays.
-
-    Identical values to ``minhash_signatures`` (same md5 formula) but zero
-    shuffle: each h_i is ``array_min(transform(...))`` inside whole-stage
-    codegen. Shingle-less docs are dropped (they have no signature).
-
-    NOTE the one-arg closure factory: a two-parameter lambda
-    (``lambda s, i=i``) would be interpreted by PySpark as the
-    *index-aware* transform variant — ``i`` silently becomes the element
-    index Column and the permutation prefix degenerates.
-    """
-
-    def perm_hash(i: int):
-        prefix = f"{i}|"
-        return lambda s: F.md5(F.concat(F.lit(prefix), s))
-
-    mins = [
-        F.array_min(F.transform(F.col("sh_arr"), perm_hash(i))).alias(f"h{i}")
-        for i in range(n_perms)
-    ]
-    return doc_sh.filter(F.size("sh_arr") > 0).select(F.col(id_col), *mins)
-
-
 # Linear-permutation MinHash: one md5 per shingle, then n cheap integer
 # permutations h_i = (a_i*x + b_i) mod P.  P is the smallest prime > 2^32;
 # x < 2^32 and a_i,b_i < 2^31 keep a_i*x + b_i < 2^63 - 1, so the arithmetic
@@ -222,13 +184,13 @@ def shingle_hash(col):
 def minhash_signatures_linear(
     doc_sh: DataFrame, id_col: str = "doc_id", n_perms: int = N_PERMS
 ) -> DataFrame:
-    """MinHash via one md5 + linear permutations (the scale default).
+    """MinHash via one md5 + linear permutations.
 
-    Same plan shape as ``minhash_signatures_arrays`` (narrow map, zero
-    shuffle, whole-stage codegen) but ~n_perms× less hashing: md5 runs once
-    per shingle into ``hb_arr``, then each h_i is an ``array_min`` over
-    ``(a_i*x + b_i) % P``. Different signature VALUES than the md5-per-perm
-    functions — the q27 oracle mirrors this formula exactly.
+    A narrow map over per-doc shingle arrays (zero shuffle, whole-stage
+    codegen): md5 runs once per shingle into ``hb_arr``, then each h_i is
+    an ``array_min`` over ``(a_i*x + b_i) % P`` — n_perms× less hashing
+    than one md5 per permutation. The q27 oracle mirrors this formula
+    exactly. Shingle-less docs are dropped (they have no signature).
     """
     consts = _perm_constants(n_perms)
     hashed = doc_sh.filter(F.size("sh_arr") > 0).select(
@@ -355,59 +317,16 @@ def lsh_candidate_pairs(
     return _bucket_pair_expansion(bands, ["band_id", "band_key"], id_col, max_bucket)
 
 
-def jaccard_verify(
-    pairs: DataFrame, sh: DataFrame, id_col: str = "doc_id", threshold: float = 0.8
-) -> DataFrame:
-    """Exact Jaccard on candidate pairs: |A∩B| / (|A|+|B|-|A∩B|) ≥ threshold.
-
-    Joins are candidate-driven (small side), never corpus×corpus.
-    Returns (id_a, id_b, jaccard). The ACCEPT is the exact-rational
-    integer comparison ``den·|A∩B| ≥ num·|A∪B|`` (threshold = num/den) —
-    round 11: filtering on the ROUNDED jaccard instead would admit pairs
-    with exact J ∈ [t−5e-5, t) that the no-miss prefilters elsewhere in
-    this module legitimately drop, an engine-parity divergence at scale.
-    The 4dp-rounded jaccard is output-only.
-    """
-    from fractions import Fraction
-
-    frac = Fraction(str(threshold))
-    num, den = frac.numerator, frac.denominator
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    sh_a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    sh_b = sh.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        pairs.join(sh_a, "id_a")
-        .join(sh_b, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    return (
-        inter.join(sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b")), "id_b")
-        .filter(
-            F.lit(den) * F.col("n_inter")
-            >= F.lit(num) * (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 4
-            ),
-        )
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
 def jaccard_verify_arrays(
     pairs: DataFrame, doc_sh: DataFrame, id_col: str = "doc_id", threshold: float = 0.8
 ) -> DataFrame:
     """Exact Jaccard via ``array_intersect`` on per-doc shingle arrays.
 
     Two candidate-driven equi-joins pull each side's array onto the pair
-    row; the set math is then a narrow map. Compare: the long-form
-    ``jaccard_verify`` shuffles the full shingle relation on (id, shingle).
-    Returns (id_a, id_b, jaccard) with jaccard 4dp-rounded OUTPUT-ONLY;
-    the accept is exact-rational (see below).
+    row; the set math is then a narrow map, with no shuffle of the
+    shingle relation on (id, shingle). Returns (id_a, id_b, jaccard) with
+    jaccard 4dp-rounded OUTPUT-ONLY; the accept is exact-rational (see
+    below).
     """
     from fractions import Fraction
 

@@ -202,7 +202,7 @@ def pagerank(
         F.count(F.lit(1)),
         F.col("out"),
     )
-    n = nodes.count()
+    n = max(nodes.count(), 1)  # empty edge list → empty ranks
     return _propagate(
         weighted,
         nodes,
@@ -324,7 +324,7 @@ def weighted_pagerank(
         F.sum("w"),
         F.round(F.col("w") / F.col("out"), 6),
     )
-    n = nodes.count()
+    n = max(nodes.count(), 1)  # empty edge list → empty ranks
     return _propagate(
         shared,
         nodes,

@@ -6,8 +6,8 @@ Reference lineage: /root/reference/notebooks/classifiers.ipynb cells 12-18
 Spark-first:
 
 - tokenisation = the reference's lowercase/strip-non-alpha regex (cell 12)
-  as Catalyst expressions (no spaCy dependency — POS filtering is gated
-  out; SURVEY.md §2.8 F16 documents the approximation);
+  as Catalyst expressions (no spaCy dependency and no POS filter;
+  SURVEY.md §2.8 F16 documents the approximation);
 - TF-IDF = HashingTF + IDF (distributed, no vocabulary broadcast at 100 TB;
   CountVectorizer is the exact-parity alternative when the vocab fits);
 - classifier = multinomial LogisticRegression (multi-class; the notebook's

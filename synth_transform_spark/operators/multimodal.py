@@ -11,12 +11,13 @@ The reference has no media surface; this is the north-star extension
 - decode / feature-extract / frame-sample are ``mapInPandas`` stages:
   Arrow-batched, per-partition, no shuffle. At cluster scale the payload
   column never crosses the driver.
-- real codec libraries (PIL / soundfile / av) are NOT in this container:
-  ``decode_media(strict=True)`` raises ``NotImplementedError`` at the
-  clearly-marked integration point; the default path substitutes a
-  deterministic fake decode derived from metadata so the Spark-side
-  plumbing (schema, batching, partitioning, UDF signatures) is fully
-  exercised and testable.
+- the codec boundary is faked, and faked the same way on every host:
+  real codec libraries (PIL / soundfile / av) are not dependencies, so
+  ``decode_media`` and ``resize_images`` substitute a deterministic decode
+  derived from metadata and payload bytes. The Spark-side plumbing
+  (schema, batching, partitioning, UDF signatures) is fully exercised,
+  and a query's output never depends on which optional packages are
+  installed.
 
 The synthetic media table is derived deterministically from the driver's
 ``documents`` table (payload = UTF-8 bytes of ``text``), so every stage has
@@ -198,28 +199,16 @@ _DECODE_SCHEMA = StructType(
 )
 
 
-def decode_media(media: DataFrame, strict: bool = False) -> DataFrame:
+def decode_media(media: DataFrame) -> DataFrame:
     """Decode stage. STUB at the codec boundary — see module docstring.
 
-    strict=True raises NotImplementedError unless a real codec library is
-    importable (it is not in this container). The default fake decoder is
-    deterministic: shape comes from metadata, mean_intensity is the payload
-    byte mean — so downstream feature code is testable end-to-end.
+    The fake decoder is deterministic: shape comes from metadata,
+    mean_intensity is the payload byte mean — so downstream feature code
+    is testable end-to-end.
     """
     import numpy as np
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            import PIL.Image  # noqa: F401  — real decoder, absent here
-
-            have_codec = True
-        except ImportError:
-            have_codec = False
-        if strict and not have_codec:
-            raise NotImplementedError(
-                "real media decode requires PIL/soundfile/av (not installed); "
-                "run with strict=False for the deterministic fake decoder"
-            )
         for pdf in batches:
             rows = {"doc_id": [], "media_type": [], "shape": [], "mean_intensity": [], "decoder": []}
             for doc_id, payload, meta in zip(pdf["doc_id"], pdf["payload"], pdf["metadata"]):
@@ -263,13 +252,11 @@ def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
     width/height rewritten.
 
     The Spark plumbing (Arrow batches, binary columns, output schema) is
-    fully real. The codec boundary follows decode_media's gate: with PIL
-    importable the payload is decoded/resized/re-encoded as a real image;
-    without it (this container) the deterministic fallback treats the
-    payload as the fake decoder's grayscale byte grid — pixel (r, c) =
-    payload[(r·W_in + c) mod n] — and nearest-neighbour samples it:
+    fully real. The codec boundary is faked as in decode_media: the
+    payload is read as the fake decoder's grayscale byte grid — pixel
+    (r, c) = payload[(r·W_in + c) mod n] — and nearest-neighbour sampled:
     out(r, c) = in(⌊r·H_in/H_out⌋, ⌊c·W_in/W_out⌋). The index math is the
-    REAL resize kernel either way; only JPEG→pixels is faked.
+    REAL resize kernel; only JPEG→pixels is faked.
 
     Input rows need metadata.width / metadata.height (image and video
     frames); emits one row per input with the H_out×W_out byte payload.
@@ -279,12 +266,6 @@ def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
     w_out, h_out = int(width), int(height)
 
     def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            import PIL.Image  # noqa: F401  — real codec path, absent here
-
-            have_codec = True
-        except ImportError:
-            have_codec = False
         for pdf in batches:
             rows = {"doc_id": [], "payload": [], "width": [], "height": [], "resizer": []}
             for doc_id, payload, meta in zip(pdf["doc_id"], pdf["payload"], pdf["metadata"]):
@@ -292,13 +273,6 @@ def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
                 buf = np.frombuffer(payload, dtype=np.uint8) if payload is not None else None
                 if buf is None or not len(buf):
                     out = None
-                elif have_codec:
-                    import io
-
-                    import PIL.Image as Image
-
-                    img = Image.open(io.BytesIO(payload)).resize((w_out, h_out))
-                    out = img.tobytes()
                 else:
                     idx = np.arange(h_in * w_in, dtype=np.int64) % len(buf)
                     grid = buf[idx].reshape(h_in, w_in)
@@ -309,7 +283,7 @@ def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
                 rows["payload"].append(out)
                 rows["width"].append(w_out)
                 rows["height"].append(h_out)
-                rows["resizer"].append("pil" if have_codec else "fake-nearest")
+                rows["resizer"].append("fake-nearest")
             yield pd.DataFrame(rows)
 
     from ..sources.readers import ensure_parallelism

@@ -28,9 +28,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-
-def _tok_array(text_col: str):
-    return F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+from .text_analysis import tokens_raw
 
 
 def chunk_documents(
@@ -50,7 +48,7 @@ def chunk_documents(
     if not 0 < stride <= size:
         raise ValueError(f"need 0 < stride <= size, got {stride=} {size=}")
     toks = docs.select(
-        F.col(id_col), _tok_array(text_col).alias("w")
+        F.col(id_col), tokens_raw(F.col(text_col)).alias("w")
     ).withColumn("n", F.size("w"))
     ks = toks.withColumn(
         "chunk_id",
@@ -93,7 +91,7 @@ def pack_sequences(
     toks = docs.select(
         F.col(id_col),
         (F.col(id_col) % n_shards).cast("long").alias("shard"),
-        F.size(_tok_array(text_col)).alias("n"),
+        F.size(tokens_raw(F.col(text_col))).alias("n"),
     ).filter(F.col("n") > 0)
     w = Window.partitionBy("shard").orderBy(id_col)
     spans = toks.withColumn("end", F.sum("n").over(w)).withColumn(

@@ -34,7 +34,8 @@ def _tokens(text_col):
 
 def tokens_raw(text_col):
     """Non-empty whitespace tokens, case-preserving — the ONE shared
-    tokenizer for corpus-statistics queries (q79/q81/q92/q93); its SQL
+    tokenizer for corpus-statistics queries (q79/q81/q92/q93), the corpus
+    dedup queries (plans/corpus_dedup_queries.py) and ``seqprep``; its SQL
     mirror is ``LIST_FILTER(STRING_SPLIT(text, ' '), t -> t <> '')``.
     Distinct from ``_tokens`` (lowercasing, for lang-ID/quality) and from
     ``dedup._gram_expr``'s internal tokenizer (n-gram engine)."""

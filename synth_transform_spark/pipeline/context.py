@@ -1,6 +1,6 @@
 """Cross-round ID mapping ("translator") as DataFrames.
 
-Reference: Context.mappings / map / translate / reverse
+Reference: Context.mappings / map / translate
 (/root/reference/synth/utils.py:263-298) — the backbone of surrogate-key
 reassignment across the four source databases. There a dict
 ``{table → {(round, original_id) → new_id}}`` probed per row; here each
@@ -56,7 +56,3 @@ class PipelineContext:
             cond = [df[key_col] == m2["_k"], df[round_col] == m2["_r"]]
         joined = df.join(F.broadcast(m2), cond, "left")
         return joined.drop("_k", "_r") if "_r" in m2.columns else joined.drop("_k")
-
-    def reverse(self, name: str) -> DataFrame:
-        """The mapping flipped: (synth_round?, new_id, original_id) — J5."""
-        return self.mappings[name]

@@ -108,19 +108,6 @@ def load_workbook(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     return sheets
 
 
-def load_kv(spark: SparkSession, path: str) -> DataFrame:
-    """A KV cache table persisted as parquet (the SqliteDict analogue)."""
-    return spark.read.parquet(path)
-
-
-def load_cities(spark: SparkSession, path: str) -> DataFrame:
-    """Geonames-shaped city seed: (name, countrycode, population,
-    alternatenames array<string>) as parquet/json."""
-    if path.endswith(".json"):
-        return spark.read.json(path)
-    return spark.read.parquet(path)
-
-
 def city_name_index(cities: DataFrame) -> DataFrame:
     """Exploded lowercase name index: (name_lc, countrycode, population,
     city_id). Precomputed once — the scale replacement for the reference's

@@ -30,16 +30,13 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ..operators.text_analysis import tokens_raw
 from ..sources.readers import ensure_parallelism, load_table
 from .registry import register
 
 SEG_TOKENS = 10
 NGRAM_N = 8
 MIN_DOCS = 3
-
-
-def _toks(text_col: str = "text"):
-    return F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
 
 
 @register(
@@ -80,7 +77,7 @@ def q115_segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside an array sort, not a global sort).
     """
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", _toks().alias("w")
+        "doc_id", tokens_raw(F.col("text")).alias("w")
     ).filter(F.size("w") > 0)
     n_segs = F.ceil(F.size("w") / F.lit(float(SEG_TOKENS))).cast("int")
     segs = docs.select(
@@ -146,7 +143,7 @@ def q116_repeated_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     with full-key tie-break executes as TakeOrderedAndProject.
     """
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", _toks().alias("w")
+        "doc_id", tokens_raw(F.col("text")).alias("w")
     ).filter(F.size("w") >= NGRAM_N)
     grams = docs.select(
         "doc_id",
@@ -235,7 +232,7 @@ def q218_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the space-joined chunk."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        "doc_id", F.posexplode(_toks()).alias("i", "tok")
+        "doc_id", F.posexplode(tokens_raw(F.col("text"))).alias("i", "tok")
     ).select("doc_id", (F.col("i") + 1).alias("i"), "tok")
     is_b = (
         F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("long")
@@ -321,7 +318,7 @@ def q231_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     when ≥2 distinct docs contain it. Docs with <8 tokens have no grams
     and are absent — same contract as q116."""
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", _toks().alias("w")
+        "doc_id", tokens_raw(F.col("text")).alias("w")
     ).filter(F.size("w") >= NGRAM_N)
     grams = docs.select(
         "doc_id",
@@ -548,7 +545,7 @@ def q235_boilerplate_templates(spark: SparkSession, sf_dir: str) -> DataFrame:
     (kind, snippet, n_docs, doc_list) — the template groups a boilerplate
     stripper would remove."""
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", _toks().alias("w")
+        "doc_id", tokens_raw(F.col("text")).alias("w")
     ).filter(F.size("w") > 0)
     prefix = docs.select(
         "doc_id",
@@ -873,7 +870,7 @@ def q399_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "doc_id", "source", "text"
             )
         )
-        .select("doc_id", "source", _toks().alias("w"))
+        .select("doc_id", "source", tokens_raw(F.col("text")).alias("w"))
         .filter(F.size("w") >= _NOVELTY_N)
     )
     ga = F.array_distinct(
@@ -1254,7 +1251,7 @@ def q490_substring_excision(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep-first substring excision at 8-gram resolution with document
     reassembly: (doc_id, n_tokens, n_removed, kept_text)."""
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", _toks().alias("w")
+        "doc_id", tokens_raw(F.col("text")).alias("w")
     )
     toks = docs.select(
         "doc_id", F.posexplode("w").alias("p0", "tok")
@@ -1362,7 +1359,7 @@ def q495_excision_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (source, n_docs, docs_touched, tokens_before, tokens_removed,
     removal_rate)."""
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", _toks().alias("w")
+        "doc_id", "source", tokens_raw(F.col("text")).alias("w")
     )
     gdocs = docs.filter(F.size("w") >= NGRAM_N)
     grams = gdocs.select(
@@ -1453,7 +1450,7 @@ def q499_source_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed 8-gram containment between source slices:
     (source_a, source_b, grams_a, shared_grams, containment_in_b)."""
     docs = load_table(spark, sf_dir, "documents").select(
-        "source", _toks().alias("w")
+        "source", tokens_raw(F.col("text")).alias("w")
     ).filter(F.size("w") >= NGRAM_N)
     grams = docs.select(
         "source",
@@ -1633,7 +1630,7 @@ def q500_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-    wdocs = docs.select("doc_id", _toks().alias("w")).filter(F.size("w") > 0)
+    wdocs = docs.select("doc_id", tokens_raw(F.col("text")).alias("w")).filter(F.size("w") > 0)
     n_segs = F.ceil(F.size("w") / F.lit(float(SEG_TOKENS))).cast("int")
     segs = wdocs.select(
         "doc_id",

@@ -149,11 +149,11 @@ def q32_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         sh_a.join(sh_b, ["shingle"])
         .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
+        .select("id_a", "id_b")
+        .distinct()
     )
-    return dedup.jaccard_verify(
-        pairs.select("id_a", "id_b"), sh, threshold=0.5
+    return dedup.jaccard_verify_arrays(
+        pairs, dedup.shingle_arrays(docs), threshold=0.5
     )
 
 
@@ -835,7 +835,7 @@ def q207_incremental_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # curation uses containment to drop the CONTAINED side. Exact
 # shared-shingle baseline like q32 — candidate space is every pair sharing
 # ≥1 shingle, the small-scale truth the LSH path (q27 candidates +
-# containment verify instead of jaccard_verify) approximates at 100 TB.
+# containment verify instead of jaccard_verify_arrays) approximates at 100 TB.
 # --------------------------------------------------------------------------
 _CONTAIN_T = 0.7
 

@@ -1,3 +1,3 @@
-from . import events, tws
+from . import events
 
-__all__ = ["events", "tws"]
+__all__ = ["events"]

@@ -1,13 +1,13 @@
 """F1 clean_string golden corpus — pins the regex-path output on malformed
 HTML AND records the expected reference (bs4+lxml, utils.py:69-87) output,
-so the divergence between the container's primary regex path and the gated
-bs4-exact path is MEASURED, not unknown.
+so the divergence between the primary regex path and the reference is
+MEASURED, not unknown.
 
 Each case: (input, regex_expected, bs4_expected, note).
 - regex_expected: what functions.cleaning.clean_string (the primary JVM
-  path) must produce — asserted always.
+  path) must produce.
 - bs4_expected: what the reference's BeautifulSoup(text,'lxml').text chain
-  produces — asserted only where bs4+lxml exist (gate-skipped otherwise).
+  produces — functions.cleaning.clean_string_html_stdlib must produce it.
   UNPINNED sentinel = parser-version-dependent corner, divergence
   direction documented in the note instead (None means a genuine NULL
   output).

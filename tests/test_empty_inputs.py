@@ -32,13 +32,21 @@ def test_similarity_on_empty_queries(spark):
 
 
 def test_temporal_and_graph_on_empty(spark):
-    from synth_transform_spark.operators.graph import ancestor_closure, kcore
+    from synth_transform_spark.operators.graph import (
+        ancestor_closure,
+        kcore,
+        pagerank,
+        weighted_pagerank,
+    )
     from synth_transform_spark.operators.temporal import interval_overlap_join
 
     e = _empty_like(spark, "node long, parent long")
     assert ancestor_closure(e, n_rounds=3).count() == 0
     edges = _empty_like(spark, "s long, d long")
     assert kcore(edges, k=2, n_rounds=2).count() == 0
+    assert pagerank(edges, n_iter=2).count() == 0
+    wedges = _empty_like(spark, "s long, d long, w double")
+    assert weighted_pagerank(wedges, n_iter=2).count() == 0
     ivals = _empty_like(spark, "l_start long, l_end long")
     rvals = _empty_like(spark, "r_start long, r_end long")
     assert interval_overlap_join(ivals, rvals).count() == 0

@@ -1,11 +1,9 @@
 """F1 HTML-strip golden-corpus tests: the regex path is pinned exactly;
-the bs4-exact path is gate-asserted against the recorded reference
-behaviour wherever bs4 exists (skipped in containers without it). See
-tests/html_strip_goldens.py for the corpus + divergence notes."""
+the stdlib html.parser path is asserted against the recorded reference
+(bs4+lxml) behaviour. See tests/html_strip_goldens.py for the corpus +
+divergence notes."""
 
 from __future__ import annotations
-
-import pytest
 
 import pyspark.sql.functions as F
 
@@ -28,22 +26,10 @@ def test_regex_path_matches_goldens(spark):
         assert got[i] == regex_exp, f"case {i} ({note}): {inp!r} -> {got[i]!r}"
 
 
-def test_bs4_path_matches_reference_goldens(spark):
-    pytest.importorskip("bs4")
-    from synth_transform_spark.functions.cleaning import clean_string_html_exact
-
-    got = _run(spark, clean_string_html_exact)
-    for i, (inp, _, bs4_exp, note) in enumerate(GOLDENS):
-        if bs4_exp is UNPINNED:
-            continue  # unpinned parser-version corner — note documents it
-        assert got[i] == bs4_exp, f"case {i} ({note}): {inp!r} -> {got[i]!r}"
-
-
 def test_stdlib_path_matches_reference_goldens(spark):
     """clean_string_html_stdlib (no import gate — runs in EVERY container)
     must reproduce the reference bs4+lxml output on all pinned cases and
-    its own pinned value on the two parser-version corners. This is the
-    always-available exactness path; zero divergences vs the reference."""
+    its own pinned value on the two parser-version corners."""
     from synth_transform_spark.functions.cleaning import clean_string_html_stdlib
 
     got = _run(spark, clean_string_html_stdlib)

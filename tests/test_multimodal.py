@@ -1,4 +1,4 @@
-"""Multimodal operator tests: binary plumbing, frame math, stub gating."""
+"""Multimodal operator tests: binary plumbing, frame math, fake codec."""
 
 from __future__ import annotations
 
@@ -80,20 +80,6 @@ def test_decode_fake_is_deterministic(media):
         assert len(r.shape) == n_dims
 
 
-def test_strict_decode_raises_without_codec(media):
-    try:
-        import PIL  # noqa: F401
-
-        pytest.skip("PIL present; strict path would succeed")
-    except ImportError:
-        pass
-    with pytest.raises(Exception) as ei:
-        multimodal.decode_media(media, strict=True).collect()
-    assert "NotImplementedError" in str(ei.value) or isinstance(
-        ei.value, NotImplementedError
-    )
-
-
 def test_resize_rewrites_dims_for_all_sized_media(media):
     """resize_images (no longer a stub as of round 4) handles every row
     carrying width/height metadata (image + video) and rewrites the dims."""
@@ -106,7 +92,7 @@ def test_resize_rewrites_dims_for_all_sized_media(media):
 
 
 def test_resize_images_fallback_kernel(spark):
-    """The codec-gated fallback must apply the REAL nearest-neighbour
+    """The fake-codec resize must apply the REAL nearest-neighbour
     index math over the byte grid: verify one payload against a numpy
     reference, and the contract columns (rewritten dims, binary out)."""
     import numpy as np
