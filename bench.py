@@ -66,6 +66,9 @@ def steal_share(s0: int, s1: int, seconds: float) -> float:
     return (s1 - s0) / (hz * (os.cpu_count() or 32) * seconds)
 
 
+_METADATA_LIMIT = "spark.sql.maxMetadataStringLength"
+
+
 def plan_fingerprint(df) -> str:
     """Stable hash of the canonicalised physical plan.
 
@@ -76,11 +79,24 @@ def plan_fingerprint(df) -> str:
     plan ids, codegen stage ids, file paths/sizes/statistics. The
     pre-execution plan is hashed (deterministic; AQE may still re-plan
     at runtime, but shape changes we author show up here).
+
+    Spark cuts each FileScan metadata value (``DataFilters: [...]``) at
+    ``spark.sql.maxMetadataStringLength`` when it builds the physical
+    plan, and the cut point moves with the width of lambda-variable ids
+    (``x_9`` vs ``x_123``), i.e. with how many lambdas the process built
+    before. So the limit is lifted while ``df`` is planned: the hash then
+    sees every pushed filter in full, whatever ran earlier. ``df`` must
+    not have been planned yet (a fresh build, before any action on it).
     """
+    conf = df.sparkSession.conf
+    limit = conf.get(_METADATA_LIMIT)
+    conf.set(_METADATA_LIMIT, str(2**31 - 1))
     try:
         s = df._jdf.queryExecution().executedPlan().toString()
     except Exception:  # pragma: no cover — fall back to the full QE dump
         s = df._jdf.queryExecution().toString()
+    finally:
+        conf.set(_METADATA_LIMIT, limit)
     s = re.sub(r"#\d+", "#", s)
     # lambda variable suffixes (x_1, x_13, ...) are allocation-order ids
     s = re.sub(r"\b([a-z]+)_\d+#", r"\1_#", s)
@@ -92,6 +108,30 @@ def plan_fingerprint(df) -> str:
     s = re.sub(r"size=\d+", "size=", s)
     s = re.sub(r"\s+", " ", s).strip()
     return hashlib.md5(s.encode()).hexdigest()[:12]
+
+
+def best_of_2(spark, fn, sf_dir: str) -> tuple[float, int]:
+    """Best of two timed ``fn(spark, sf_dir).count()`` runs, each after
+    releasing persisted data and a JVM GC: (seconds, rows).
+
+    GC nudge: earlier queries leave dead codegen classes and broadcast
+    refs; without it, collection lands INSIDE the timed region and
+    inflates heavy queries 2-3x (q27 measured 3-5s polluted vs 1.8s
+    clean — matching its idle steady state). Best-of-2, because the first
+    run can absorb stray JIT/GC noise from earlier queries in the shared
+    JVM."""
+    from synth_transform_spark.caching import release_cached
+
+    best, n = None, 0
+    for _ in range(2):
+        release_cached()
+        spark.catalog.clearCache()
+        spark.sparkContext._jvm.System.gc()
+        t0 = time.perf_counter()
+        n = fn(spark, sf_dir).count()
+        dt = round(time.perf_counter() - t0, 3)
+        best = dt if best is None else min(best, dt)
+    return best, n
 
 
 def main() -> int:
@@ -126,8 +166,6 @@ def main() -> int:
     release_cached()
     spark.catalog.clearCache()
 
-    # best-of-2: per-query steady-state wall time (first run can absorb
-    # stray JIT/GC noise from earlier queries in the shared JVM).
     timings: dict[str, float] = {}
     plan_fps: dict[str, str] = {}
     # steal accounting over the TIMED region only (warmup excluded) so the
@@ -139,20 +177,7 @@ def main() -> int:
             plan_fps[name] = plan_fingerprint(fn(spark, sf_dir))
         except Exception as ex:  # fingerprint is diagnostics, never fatal
             print(f"# fingerprint {name} failed: {ex}", file=sys.stderr)
-        best, n = None, 0
-        for _ in range(2):
-            release_cached()
-            spark.catalog.clearCache()
-            # GC nudge: 18 earlier queries leave dead codegen classes and
-            # broadcast refs; without this, collection lands INSIDE the
-            # timed region and inflates heavy queries 2-3x (q27 measured
-            # 3-5s polluted vs 1.8s clean — matching its idle steady state).
-            spark.sparkContext._jvm.System.gc()
-            t0 = time.perf_counter()
-            n = fn(spark, sf_dir).count()
-            dt = round(time.perf_counter() - t0, 3)
-            best = dt if best is None else min(best, dt)
-        timings[name] = best
+        timings[name], n = best_of_2(spark, fn, sf_dir)
         print(f"# {name}: {timings[name]}s ({n} rows)", file=sys.stderr)
 
     # Core steal window CLOSES here (round-11 advice: the normalization
@@ -202,17 +227,8 @@ def main() -> int:
             except Exception as ex:
                 print(f"# fingerprint {name} failed: {ex}", file=sys.stderr)
             q.spark(spark, warm_dir).count()  # warm
-            best = None
-            for _ in range(2):
-                release_cached()
-                spark.catalog.clearCache()
-                spark.sparkContext._jvm.System.gc()
-                t0 = time.perf_counter()
-                n = q.spark(spark, sf_dir).count()
-                dt = round(time.perf_counter() - t0, 3)
-                best = dt if best is None else min(best, dt)
-            ext[name] = best
-            print(f"# extended {name}: {best}s ({n} rows)", file=sys.stderr)
+            ext[name], n = best_of_2(spark, q.spark, sf_dir)
+            print(f"# extended {name}: {ext[name]}s ({n} rows)", file=sys.stderr)
         except Exception as ex:  # extended failures must not sink the bench
             print(f"# extended {name} failed: {ex}", file=sys.stderr)
 

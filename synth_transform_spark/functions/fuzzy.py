@@ -11,12 +11,11 @@ common Crossref case).
 
 Two implementations:
 
-- ``partial_ratio`` (pure Python; ``partial_ratio_udf`` wraps it as an
-  Arrow-batched pandas UDF for the declared-Python enrichment stages):
-  reference semantics — best indel ratio (2·LCS/(|a|+|b|), which is
-  python-Levenshtein's ``ratio``: substitution cost 2 makes the weighted
-  distance |a|+|b|−2·LCS) of the shorter string over windows of the longer,
-  with fuzzywuzzy's >0.995 early-100 rule and ``int(round())`` half-even
+- ``partial_ratio`` (pure Python, the reference that
+  ``partial_ratio_window`` is tested against): reference semantics — best
+  indel ratio (2·LCS/(|a|+|b|), which is python-Levenshtein's ``ratio``:
+  substitution cost 2 makes the weighted distance |a|+|b|−2·LCS) of the
+  shorter string over windows of the longer, with fuzzywuzzy's >0.995 early-100 rule and ``int(round())`` half-even
   rounding (fuzzywuzzy utils.intr). One documented divergence: fuzzywuzzy
   anchors candidate windows on SequenceMatcher matching blocks, a heuristic
   whose choices depend on python-Levenshtein's DP tie-breaking; here EVERY
@@ -36,7 +35,6 @@ Two implementations:
 
 from __future__ import annotations
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
@@ -76,21 +74,6 @@ def partial_ratio(s1: str | None, s2: str | None) -> int | None:
         if r > best:
             best = r
     return int(round(100 * best))
-
-
-def partial_ratio_udf():
-    """Arrow-batched pandas UDF over ``partial_ratio`` for the declared
-    Python enrichment stages (title-match gates, resources.py:278,330)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import IntegerType
-
-    @pandas_udf(IntegerType())
-    def _pr(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series(
-            [partial_ratio(x, y) for x, y in zip(a, b)], dtype="object"
-        )
-
-    return _pr
 
 
 def partial_ratio_window(a: Column, b: Column) -> Column:

@@ -51,6 +51,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..caching import iterate
+from .text_analysis import tokens_raw
 
 
 @dataclass(frozen=True)
@@ -200,9 +201,7 @@ def unigram_viterbi(
 
     words = (
         docs.select(
-            F.explode(
-                F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-            ).alias("word")
+            F.explode(tokens_raw(F.col(text_col))).alias("word")
         )
         .filter(F.length("word") <= max_word_len)
         .groupBy("word")

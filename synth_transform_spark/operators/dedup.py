@@ -69,6 +69,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from .text_analysis import tokens_raw
+
 # 12 permutations in 4 bands of 3: P(candidate | jaccard s) = 1-(1-s^3)^4,
 # ≈0.97 at s=0.9, ≈0.29 at s=0.5 — tuned for near-dup (s≥0.8) recall.
 N_PERMS = 12
@@ -97,7 +99,7 @@ def exact_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 
 
 def _gram_expr(text_col: str, n: int):
-    toks_raw = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    toks_raw = tokens_raw(F.col(text_col))
 
     # Round 11: bind the token array ONCE via a single-element transform.
     # Building the gram lambda directly over ``toks_raw`` duplicates the
@@ -446,7 +448,7 @@ def simhash_signatures(docs: DataFrame, id_col: str = "doc_id", text_col: str = 
         ensure_parallelism(docs)
         .select(
             F.col(id_col),
-            F.explode(F.filter(F.split(F.col(text_col), " "), lambda t: t != "")).alias("tok"),
+            F.explode(tokens_raw(F.col(text_col))).alias("tok"),
         )
         .groupBy(id_col, "tok")
         .agg(F.count(F.lit(1)).alias("w"))

@@ -132,9 +132,7 @@ def span_corrupt(
     """
     toks = docs.select(
         F.col(id_col),
-        F.posexplode(
-            F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-        ).alias("pos", "tok"),
+        F.posexplode(tokens_raw(F.col(text_col))).alias("pos", "tok"),
     ).withColumn("grp", F.floor(F.col("pos") / chunk))
     chunks = toks.select(id_col, "grp").distinct().withColumn(
         "masked",

@@ -15,20 +15,22 @@ the DuckDB oracle computes the IDENTICAL registers and estimate and the
 driver's hash gate can verify a *sketch* exactly:
 
 - h           = first 8 md5 hex chars of the value → 32-bit integer
-- bucket      = top 8 bits (m = 256 registers)
-- w           = low 24 bits; rank = leading zeros in w + 1
-              = 25 - bit_length(w)  (bit_length via length(bin(w)) — both
-                engines render minimal binary strings), 25 if w = 0
+- bucket      = top ``bits`` bits (m = 2^bits registers; default 8,
+                m = 256; q379 audits 4, 6, 8 and 10)
+- w           = low 32 - bits bits; rank = leading zeros in w + 1
+              = 33 - bits - bit_length(w)  (bit_length via length(bin(w)) —
+                both engines render minimal binary strings), 33 - bits if
+                w = 0
 - register[b] = max rank seen in bucket b
-- raw         = alpha_256 · m² / Σ 2^-R_b   (empty registers contribute 2⁰)
+- raw         = alpha_m · m² / Σ 2^-R_b   (empty registers contribute 2⁰)
 - estimate    = m · ln(m / V)  if raw ≤ 2.5 m and V > 0 (linear-counting
                 small-range correction, V = empty registers), else raw
 
 Determinism across engines: Σ 2^-R_b is a sum of powers of two spanning
 < 53 binary orders — EXACT in IEEE double regardless of summation order,
 so Spark's partial-agg tree and DuckDB's serial sum produce the same bits;
-alpha·m² is inlined as one double literal; ln differs across libms by ulps
-(≪ the 4dp round). The 32-bit-hash large-range correction is omitted —
+alpha_m·m² is computed in Python and inlined as one double literal; ln
+differs across libms by ulps (≪ the 4dp round). The 32-bit-hash large-range correction is omitted —
 register saturation, not hash collision, is the binding limit here.
 
 Scale: the sketch IS the scale story — per group the state is ≤ m registers
@@ -46,47 +48,66 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-HLL_BUCKET_BITS = 8
-HLL_M = 1 << HLL_BUCKET_BITS            # 256 registers
-_ALPHA_M2 = 47072.71267120224           # 0.7213/(1+1.079/256) * 256²
+HLL_BUCKET_BITS = 8                     # m = 256 registers
+
+# Standard HLL bias constants alpha_m for small register counts; for
+# m >= 128 the closed form 0.7213/(1 + 1.079/m) applies.
+HLL_ALPHAS = {
+    16: 0.673,
+    32: 0.697,
+    64: 0.709,
+}
+
+
+def hll_alpha(m: int) -> float:
+    """alpha_m for an m-register sketch (Flajolet et al. 2007)."""
+    return HLL_ALPHAS.get(m, 0.7213 / (1.0 + 1.079 / m))
 
 
 def hll_registers(
-    df: DataFrame, group_cols: Sequence[str], value_col: str
+    df: DataFrame,
+    group_cols: Sequence[str],
+    value_col: str,
+    bits: int = HLL_BUCKET_BITS,
 ) -> DataFrame:
-    """(group_cols…, bucket, r): max-rank register per group and bucket."""
+    """(group_cols…, bucket, r): max-rank register per group and bucket of
+    a 2^bits-register sketch. The top ``bits`` of the 32-bit hash select
+    the bucket; the leading-zero rank of the remaining word fills it."""
     h = F.conv(F.substring(F.md5(F.col(value_col).cast("string")), 1, 8), 16, 10).cast(
         "long"
     )
-    bucket = (h / F.lit(1 << 24)).cast("long")  # top 8 of 32 bits
-    w = h % F.lit(1 << 24)
+    wbits = 32 - bits
+    bucket = (h / F.lit(1 << wbits)).cast("long")
+    w = h % F.lit(1 << wbits)
     tagged = df.select(
         *group_cols, bucket.alias("bucket"), w.alias("w")
     ).withColumn(
         "rank",
-        F.when(F.col("w") == 0, F.lit(25)).otherwise(
-            F.lit(25) - F.length(F.bin("w"))
+        F.when(F.col("w") == 0, F.lit(wbits + 1)).otherwise(
+            F.lit(wbits + 1) - F.length(F.bin("w"))
         ),
     )
     return tagged.groupBy(*group_cols, "bucket").agg(F.max("rank").alias("r"))
 
 
 def hll_estimate_from_registers(
-    regs: DataFrame, group_cols: Sequence[str]
+    regs: DataFrame, group_cols: Sequence[str], bits: int = HLL_BUCKET_BITS
 ) -> DataFrame:
     """Estimate per group from a (group_cols…, bucket, r) register relation
-    — the merge-then-estimate half of the sketch, reusable over registers
-    that were merged across partitions/days (register-wise max)."""
+    of a 2^bits-register sketch — the merge-then-estimate half of the
+    sketch, reusable over registers that were merged across partitions/days
+    (register-wise max)."""
+    m = 1 << bits
     per_group = regs.groupBy(*group_cols).agg(
         F.sum(F.pow(F.lit(2.0), -F.col("r"))).alias("sum_obs"),
         F.count(F.lit(1)).alias("n_obs"),
     )
-    m = F.lit(float(HLL_M))
-    zeros = m - F.col("n_obs")
+    mc = F.lit(float(m))
+    zeros = mc - F.col("n_obs")
     sum_inv = F.col("sum_obs") + zeros  # empty registers: 2⁰ each
-    raw = F.lit(_ALPHA_M2) / sum_inv
+    raw = F.lit(hll_alpha(m) * m * m) / sum_inv
     est = F.when(
-        (raw <= F.lit(2.5 * HLL_M)) & (zeros > 0), m * F.log(m / zeros)
+        (raw <= F.lit(2.5 * m)) & (zeros > 0), mc * F.log(mc / zeros)
     ).otherwise(raw)
     return per_group.select(
         *group_cols, F.round(est, 4).alias("hll_distinct")
@@ -391,70 +412,4 @@ def kmv_set_estimates(
                 "est_intersection"
             ),
         )
-    )
-
-
-# --- parameterized-precision HLL (error-curve audits) ----------------------
-
-# Standard HLL bias constants alpha_m for small register counts; for
-# m >= 128 the closed form 0.7213/(1 + 1.079/m) applies.
-HLL_ALPHAS = {
-    16: 0.673,
-    32: 0.697,
-    64: 0.709,
-}
-
-
-def hll_alpha(m: int) -> float:
-    """alpha_m for an m-register sketch (Flajolet et al. 2007)."""
-    return HLL_ALPHAS.get(m, 0.7213 / (1.0 + 1.079 / m))
-
-
-def hll_registers_b(
-    df: DataFrame, group_cols: Sequence[str], value_col: str, bits: int
-) -> DataFrame:
-    """(group_cols…, bucket, r) registers for a 2^bits-register sketch —
-    the precision-parameterized twin of ``hll_registers`` (which pins
-    bits = 8). Same md5-derived 32-bit hash: top ``bits`` select the
-    bucket, the remaining 32-bits word's leading-zero rank fills it."""
-    h = F.conv(
-        F.substring(F.md5(F.col(value_col).cast("string")), 1, 8), 16, 10
-    ).cast("long")
-    wbits = 32 - bits
-    bucket = (h / F.lit(1 << wbits)).cast("long")
-    w = h % F.lit(1 << wbits)
-    tagged = df.select(
-        *group_cols, bucket.alias("bucket"), w.alias("w")
-    ).withColumn(
-        "rank",
-        F.when(F.col("w") == 0, F.lit(wbits + 1)).otherwise(
-            F.lit(wbits + 1) - F.length(F.bin("w"))
-        ),
-    )
-    return tagged.groupBy(*group_cols, "bucket").agg(
-        F.max("rank").alias("r")
-    )
-
-
-def hll_estimate_b(
-    regs: DataFrame, group_cols: Sequence[str], bits: int
-) -> DataFrame:
-    """Estimate per group from ``hll_registers_b`` registers, applying
-    the m-appropriate alpha and the small-range linear-counting
-    correction. Returns (group_cols…, hll_distinct)."""
-    m = 1 << bits
-    alpha_m2 = hll_alpha(m) * m * m
-    per_group = regs.groupBy(*group_cols).agg(
-        F.sum(F.pow(F.lit(2.0), -F.col("r"))).alias("sum_obs"),
-        F.count(F.lit(1)).alias("n_obs"),
-    )
-    mc = F.lit(float(m))
-    zeros = mc - F.col("n_obs")
-    sum_inv = F.col("sum_obs") + zeros
-    raw = F.lit(alpha_m2) / sum_inv
-    est = F.when(
-        (raw <= F.lit(2.5 * m)) & (zeros > 0), mc * F.log(mc / zeros)
-    ).otherwise(raw)
-    return per_group.select(
-        *group_cols, F.round(est, 4).alias("hll_distinct")
     )

@@ -28,17 +28,21 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 STOPWORDS = ("the", "a", "and", "of", "to", "in")
 
 
-def _tokens(text_col):
+def tokens_lower(text_col):
+    """Non-empty whitespace tokens of the lowercased text — the shared
+    tokenizer for lang-ID, quality and casing-insensitive corpus queries;
+    its SQL mirror is ``LIST_FILTER(STRING_SPLIT(LOWER(text), ' '),
+    t -> t <> '')``."""
     return F.filter(F.split(F.lower(text_col), " "), lambda t: t != "")
 
 
 def tokens_raw(text_col):
     """Non-empty whitespace tokens, case-preserving — the ONE shared
-    tokenizer for corpus-statistics queries (q79/q81/q92/q93), the corpus
-    dedup queries (plans/corpus_dedup_queries.py) and ``seqprep``; its SQL
+    tokenizer for corpus statistics, dedup, BPE and ``seqprep``; its SQL
     mirror is ``LIST_FILTER(STRING_SPLIT(text, ' '), t -> t <> '')``.
-    Distinct from ``_tokens`` (lowercasing, for lang-ID/quality) and from
-    ``dedup._gram_expr``'s internal tokenizer (n-gram engine)."""
+    Distinct from ``tokens_lower`` and from the ``" +"``-splitting
+    tokenizers of ``ml.tokens_col`` and ``stemming``.
+    ``tests/test_coverage_catalog.py`` fails on an inline copy of either."""
     return F.filter(F.split(text_col, " "), lambda t: t != "")
 
 
@@ -54,7 +58,7 @@ BPE_UNIT_PATTERN = r" ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9 ]+"
 def token_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Per-doc token counting: whitespace tokens (n/distinct/avg length)
     plus the BPE-ish subword-unit count (``BPE_UNIT_PATTERN``)."""
-    toks = _tokens(F.col(text_col))
+    toks = tokens_lower(F.col(text_col))
     return docs.select(
         F.col(id_col),
         F.size(toks).cast("long").alias("n_tokens"),
@@ -77,7 +81,7 @@ def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     The shape matches production quality filters (Gopher/C4-style rules);
     thresholds are illustrative.
     """
-    toks = _tokens(F.col(text_col))
+    toks = tokens_lower(F.col(text_col))
     n = F.size(toks)
     stop_hits = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
     punct = F.length(F.col(text_col)) - F.length(
@@ -104,7 +108,7 @@ def lang_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     Deterministic tie-break: higher score wins, then alphabetical language
     code. Entirely JVM-side (array intersect over a literal lexicon).
     """
-    toks = _tokens(F.col(text_col))
+    toks = tokens_lower(F.col(text_col))
     scores = [
         F.size(F.filter(toks, lambda t: t.isin(*markers))).alias(f"score_{lang}")
         for lang, markers in sorted(LANG_MARKERS.items())
@@ -138,7 +142,7 @@ def top_tokens(docs: DataFrame, text_col: str = "text", k: int = 10) -> DataFram
     the result set is deterministic.
     """
     return (
-        docs.select(F.explode(_tokens(F.col(text_col))).alias("token"))
+        docs.select(F.explode(tokens_lower(F.col(text_col))).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), F.asc("token"))
@@ -303,7 +307,7 @@ def segment_lang_profile(
     (zero shuffle); the only shuffles are the (doc, pred) count and the
     per-doc rollup — both doc-keyed, the natural unit.
     """
-    toks = _tokens(F.col(text_col))
+    toks = tokens_lower(F.col(text_col))
     n_segs = F.ceil(F.size("w") / F.lit(float(seg_tokens))).cast("int")
     segs = (
         docs.select(F.col(id_col), toks.alias("w"))

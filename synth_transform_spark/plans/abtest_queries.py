@@ -8,7 +8,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..operators import windows
+from ..operators import text_analysis, windows
 from ..sources.readers import load_table
 from .registry import register
 
@@ -1524,9 +1524,7 @@ def q313_chao1_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "source",
-        F.explode(F.filter(F.split("text", " "), lambda t: t != "")).alias(
-            "tok"
-        ),
+        F.explode(text_analysis.tokens_raw("text")).alias("tok"),
     )
     tf = tok.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c"))
     fof = tf.groupBy("source").agg(

@@ -30,7 +30,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..operators.text_analysis import tokens_raw
+from ..operators.text_analysis import tokens_lower, tokens_raw
 from ..sources.readers import ensure_parallelism, load_table
 from .registry import register
 
@@ -1060,9 +1060,7 @@ def q413_cross_source_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat_ws(
                 " ",
                 F.slice(
-                    F.filter(
-                        F.split(F.lower("text"), " "), lambda t: t != ""
-                    ),
+                    tokens_lower("text"),
                     1,
                     _HEAD_K,
                 ),
@@ -1154,9 +1152,7 @@ def q426_dup_depth_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat_ws(
                 " ",
                 F.slice(
-                    F.filter(
-                        F.split(F.lower("text"), " "), lambda t: t != ""
-                    ),
+                    tokens_lower("text"),
                     1,
                     _HEAD_K,
                 ),

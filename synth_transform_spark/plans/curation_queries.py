@@ -346,9 +346,7 @@ def q401_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         "source",
-        F.explode(
-            F.filter(F.split(F.lower("text"), " "), lambda t: t != "")
-        ).alias("tok"),
+        F.explode(text_analysis.tokens_lower("text")).alias("tok"),
     )
     tf = toks.groupBy("doc_id", "source", "tok").agg(
         F.count(F.lit(1)).alias("c")
@@ -473,7 +471,7 @@ def q402_langid_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lang-ID confidence audit: (source, n_docs, accuracy, mean_margin,
     ambiguous_share)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), " "), lambda t: t != "")
+    toks = text_analysis.tokens_lower("text")
     langs = sorted(text_analysis.LANG_MARKERS)
     scores = [
         F.size(

@@ -9,7 +9,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators import dedup
+from ..operators import dedup, text_analysis
 from ..sources.readers import load_table
 from .registry import register
 
@@ -994,7 +994,7 @@ def q261_kmv_source_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    w = F.filter(F.split("text", " "), lambda t: t != "")
+    w = text_analysis.tokens_raw("text")
     sh = (
         docs.select("source", w.alias("w"))
         .filter(F.size("w") >= 3)
@@ -1259,7 +1259,6 @@ def q365_weighted_jaccard_sources(spark: SparkSession, sf_dir: str) -> DataFrame
     (source_a, source_b, smin, smax, weighted_jaccard)."""
     import pyspark.sql.functions as F
 
-    from ..operators import text_analysis
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
@@ -1483,9 +1482,7 @@ def q496_canonical_doc_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters = graph.duplicate_clusters(pairs)  # (doc_id, cluster_id, size)
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.filter(F.split(F.col("text"), " "), lambda t: t != "")
-        ).alias("tok"),
+        F.explode(text_analysis.tokens_raw(F.col("text"))).alias("tok"),
     )
     rich = toks.groupBy("doc_id").agg(
         F.countDistinct("tok").alias("nd")

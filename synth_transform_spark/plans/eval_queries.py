@@ -1013,7 +1013,7 @@ def q317_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """McNemar continuity-corrected chi-square for two paired is-English
     heuristics: (n, both_right, b, c, both_wrong, acc_a, acc_b, chi2_cc)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
+    toks = text_analysis.tokens_raw("text")
     preds = docs.select(
         (F.col("lang") == "en").cast("int").alias("y"),
         F.concat(F.lit(" "), F.lower("text"), F.lit(" "))
@@ -1284,7 +1284,7 @@ def q324_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Krippendorff's alpha over three partially-abstaining raters:
     (n_units, n, o11, o00, q01, alpha)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
+    toks = text_analysis.tokens_raw("text")
     short = F.filter(
         F.split("text", " "), lambda t: (t != "") & (F.length(t) <= 2)
     )

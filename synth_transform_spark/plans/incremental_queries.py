@@ -228,8 +228,8 @@ def q379_hll_error_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = None
     for bits in (4, 6, 8, 10):
-        regs = sketches.hll_registers_b(users, [], "user_id", bits)
-        est = sketches.hll_estimate_b(regs, [], bits).select(
+        regs = sketches.hll_registers(users, [], "user_id", bits=bits)
+        est = sketches.hll_estimate_from_registers(regs, [], bits=bits).select(
             F.lit(bits).cast("long").alias("bits"),
             F.lit(1 << bits).cast("long").alias("m"),
             F.col("hll_distinct").alias("estimate"),

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..operators import windows
+from ..operators import text_analysis, windows
 from ..sources.readers import load_table
 from .registry import register
 
@@ -1667,7 +1667,7 @@ def q308_greedy_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..caching import iterate, persist_tracked
 
     docs = load_table(spark, sf_dir, "documents")
-    w = F.filter(F.split("text", " "), lambda t: t != "")
+    w = text_analysis.tokens_raw("text")
     st = persist_tracked(
         docs.select("source", w.alias("w"))
         .filter(F.size("w") >= 3)

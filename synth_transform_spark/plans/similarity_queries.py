@@ -10,7 +10,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators import similarity
+from ..operators import similarity, text_analysis
 from ..sources.readers import load_table
 from .registry import register
 
@@ -392,7 +392,7 @@ def q118_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.array_distinct(F.filter(F.split("text", " "), lambda t: t != "")).alias("toks")
+        "doc_id", F.array_distinct(text_analysis.tokens_raw("text")).alias("toks")
     )
     qtoks = docs.filter(F.col("doc_id") == 0).select(F.explode("toks").alias("tok"))
     ovl = (

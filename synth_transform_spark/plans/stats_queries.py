@@ -17,6 +17,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ..operators import text_analysis
 from ..sources.readers import load_table
 from .registry import register
 
@@ -1686,7 +1687,7 @@ def q337_filter_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Selectivity-measured cascade ordering for four curation filters:
     (filter, n_pass, sel, cost, drop_per_cost, opt_rank)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
+    toks = text_analysis.tokens_raw("text")
     counts = docs.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum((F.col("n_chars") >= 100).cast("long")).alias("p_len"),

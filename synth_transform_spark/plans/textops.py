@@ -1186,7 +1186,7 @@ def q157_source_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer AVGs are exact-ratio divides, so 4dp rounding is
     engine-stable."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower(F.col("text")), " "), lambda x: x != "")
+    toks = text_analysis.tokens_lower(F.col("text"))
     punct_ratio = F.round(
         (
             F.length("text")
@@ -1898,9 +1898,7 @@ def q234_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.filter(F.split(F.col("text"), " "), lambda t: t != "")
-        ).alias("tok"),
+        F.explode(text_analysis.tokens_raw(F.col("text"))).alias("tok"),
     )
     counts = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
     clc_micro = F.round(
@@ -2037,7 +2035,7 @@ def q265_distinct_n_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-1/2/3 n-gram diversity ratios per source:
     (source, n_tokens, distinct_1, distinct_2, distinct_3)."""
     docs = load_table(spark, sf_dir, "documents").select(
-        "source", F.filter(F.split("text", " "), lambda t: t != "").alias("w")
+        "source", text_analysis.tokens_raw("text").alias("w")
     )
 
     def grams(n: int):
@@ -2268,9 +2266,7 @@ def q269_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     per_doc = docs.select(
         "source",
-        F.size(F.filter(F.split("text", " "), lambda t: t != "")).cast(
-            "long"
-        ).alias("words"),
+        F.size(text_analysis.tokens_raw("text")).cast("long").alias("words"),
         F.size(F.regexp_extract_all("text", F.lit("[aeiouy]+"), F.lit(0)))
         .cast("long")
         .alias("syllables"),
@@ -2599,7 +2595,6 @@ ORDER BY t.rk_i, t.rk_j
 def q370_umass_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UMass coherence over the top-10 content tokens' co-occurrence:
     (w_i, w_j, d_i, d_j, d_ij, term, coherence)."""
-    from ..operators import text_analysis
 
     docs = load_table(spark, sf_dir, "documents")
     toks = (
@@ -2773,7 +2768,6 @@ def q372_filter_disparity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Four-fifths-rule disparity audit of the curation filters per
     source: (filter, source, n, n_pass, pass_rate, impact_ratio,
     disparate)."""
-    from ..operators import text_analysis
 
     docs = load_table(spark, sf_dir, "documents")
     conds = {

@@ -876,7 +876,7 @@ def q192_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), " "), lambda x: x != "")
+    toks = text_analysis.tokens_lower("text")
     scored = docs.select(
         "doc_id",
         "source",
@@ -1416,7 +1416,7 @@ def q274_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.groupBy("source").agg(
         F.sum(
-            F.size(F.filter(F.split("text", " "), lambda t: t != ""))
+            F.size(text_analysis.tokens_raw("text"))
         ).alias("n_tokens")
     )
     frozen = toks.select(
@@ -1606,7 +1606,6 @@ FROM per_doc GROUP BY c ORDER BY chunk_size
 def q361_chunk_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Packing economics per candidate chunk size:
     (chunk_size, n_chunks, n_full, mean_last_fill, waste_share)."""
-    from ..operators import text_analysis
 
     docs = load_table(spark, sf_dir, "documents")
     counts = docs.select(
@@ -1711,7 +1710,6 @@ def q367_dedup_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source corpus shrinkage under keep-one exact dedup:
     (source, n_docs, n_dropped, tokens_total, tokens_saved,
     save_share)."""
-    from ..operators import text_analysis
 
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
@@ -1943,7 +1941,6 @@ FROM models ORDER BY model
 def q371_lm_model_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AIC/BIC of MLE unigram vs bigram LMs on the training slice:
     (model, n_events, k_params, loglik, aic, bic)."""
-    from ..operators import text_analysis
 
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 13 == 1

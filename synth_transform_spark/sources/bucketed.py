@@ -40,7 +40,6 @@ def write_bucketed(
     key: str,
     n_buckets: int = 8,
     path: str | None = None,
-    sort: bool = True,
     mode: str = "overwrite",
 ) -> None:
     """Materialise ``df`` as a bucketed catalog table on ``key``.
@@ -53,9 +52,8 @@ def write_bucketed(
         .write.format("parquet")
         .mode(mode)
         .bucketBy(n_buckets, key)
+        .sortBy(key)
     )
-    if sort:
-        w = w.sortBy(key)
     if path is not None:
         w = w.option("path", path)
     w.saveAsTable(table)

@@ -33,13 +33,32 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver table. Column pruning/pushdown left to Catalyst.
+def normalise_events_ts(df: DataFrame) -> DataFrame:
+    """Map ``events.ts`` to the engine's declared LTZ-µs timestamp — the one
+    owner of this decision for batch (``load_table``) and stream
+    (``streaming.events.read_events_stream``) reads.
 
-    ``events.ts`` is INT64 TIMESTAMP(NANOS) parquet, which Spark 4 refuses by
-    default: read nanos as long and truncate to microsecond timestamps
-    (integer ``div`` — matches DuckDB's ns→us cast truncation).
+    The physical type varies by testdata generation:
+
+    - INT64 TIMESTAMP(NANOS), which Spark 4 refuses by default: read as long
+      (``nanosAsLong``, set by the caller before the read) and truncate to
+      microseconds with integer ``div`` — DuckDB's ns→µs cast truncates too;
+    - timestamp[us] with no tz, which Spark 4 infers as TIMESTAMP_NTZ: cast
+      to LTZ. The session tz is pinned UTC, so the instant is unchanged and
+      epoch arithmetic (RANGE windows, EPOCH parity with DuckDB) keeps
+      working.
     """
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one driver table. Column pruning/pushdown left to Catalyst;
+    ``events.ts`` goes through ``normalise_events_ts``."""
     # Defensive session settings: the driver supplies its own SparkSession,
     # which may run ANSI-on (Spark 4 default) and a non-UTC session timezone.
     # The engine's declared semantics are null-on-failure casts and
@@ -49,18 +68,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.ansi.enabled", "false")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            # INT64 TIMESTAMP(NANOS) parquet: nanosAsLong + µs truncation.
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            # timestamp[us] with no tz: Spark 4 infers TIMESTAMP_NTZ. Cast
-            # to the engine's declared LTZ type — the session tz is pinned
-            # UTC above, so the instant is unchanged and epoch arithmetic
-            # (RANGE windows, EPOCH parity with DuckDB) keeps working.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
+        return normalise_events_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 

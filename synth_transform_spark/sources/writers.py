@@ -1,4 +1,4 @@
-"""Partitioned / bucketed table writers — the engine's sink surface.
+"""Partitioned and multi-format table writers — the engine's sink surface.
 
 Reference lineage: the target-warehouse writes (SURVEY.md §2.1 S11
 `target.add(Model(...))` row-at-a-time inserts, S14 DDL) become atomic
@@ -9,7 +9,8 @@ columnar writes. The 100 TB layout policy lives here:
   them scan only matching directories (PartitionFilters in the plan).
 - **bucketing** = co-location for repeated equi-joins on a hot key (the
   translator mapping's (synth_round, original_id), user_guid): bucketed
-  tables joined on the bucket key skip the shuffle entirely.
+  tables joined on the bucket key skip the shuffle entirely. The bucketed
+  writer lives in ``bucketed.py``.
 - writes go through a staging path + atomic rename semantics provided by
   the committer; per-table overwrite mirrors the reference's per-step
   transactional commit (utils.py:313-315).
@@ -27,7 +28,6 @@ def write_partitioned(
     partition_by: list[str],
     mode: str = "overwrite",
     sort_by: list[str] | None = None,
-    target_file_partitions: int | None = None,
 ) -> None:
     """Write a parquet table partitioned by directory keys.
 
@@ -37,32 +37,9 @@ def write_partitioned(
     min/max skipping on those columns.
     """
     out = df.repartition(*[F.col(c) for c in partition_by])
-    if target_file_partitions:
-        out = out.repartition(target_file_partitions, *[F.col(c) for c in partition_by])
     if sort_by:
         out = out.sortWithinPartitions(*sort_by)
     out.write.mode(mode).partitionBy(*partition_by).parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_by: list[str],
-    n_buckets: int,
-    mode: str = "overwrite",
-) -> None:
-    """Save as a bucketed managed table (requires a catalog — saveAsTable).
-
-    Joining two tables bucketed identically on the join key produces a
-    shuffle-free sort-merge join; this is the co-located-join strategy for
-    the translator mapping and other repeatedly-joined hot keys.
-    """
-    (
-        df.write.mode(mode)
-        .bucketBy(n_buckets, *bucket_by)
-        .sortBy(*bucket_by)
-        .saveAsTable(table_name)
-    )
 
 
 def read_partitioned(spark: SparkSession, path: str) -> DataFrame:

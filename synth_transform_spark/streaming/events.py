@@ -8,6 +8,11 @@ stream-batch equivalence is asserted in
 tests/test_streaming.py using the availableNow trigger (process all existing
 input then stop — the deterministic test harness for streams).
 
+``read_events_stream`` maps ``events.ts`` with the batch reader's
+``sources.readers.normalise_events_ts``, so a stream and a batch read of
+the same file see the same timestamps. Dedup within the watermark is one
+function, ``dedup_within_watermark``, keyed by its ``keys`` argument.
+
 Design for scale:
 - file-source streams with maxFilesPerTrigger for backpressure;
 - event-time watermarks bound all aggregation state;
@@ -18,79 +23,31 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    TimestampNTZType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
-#: Post-conversion schema (ts already microsecond timestamp).
-EVENTS_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
-
-#: Raw file schema (nanos read as long via legacy conf).
-_RAW_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", LongType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
+from ..sources.readers import normalise_events_ts
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet, normalised to LTZ-µs
-    ``ts`` exactly like the batch reader.
+    ``ts`` by the batch reader's ``normalise_events_ts``.
 
-    The physical ts type varies by testdata generation — INT64
-    TIMESTAMP(NANOS) (read as long + ns→µs truncation) or timestamp[us]
-    with no tz (TIMESTAMP_NTZ, cast to LTZ under the pinned-UTC session) —
-    so probe the footer with a batch read (metadata only, no scan) and pick
-    the matching stream schema; a wrong static schema would silently
-    reinterpret raw values and corrupt every event-time operator.
+    A file-source stream needs a declared schema; it is taken from the
+    file footer with a batch read (metadata only, no scan), so the stream
+    sees the same physical ``ts`` type as ``load_table`` — a wrong static
+    schema would silently reinterpret raw values and corrupt every
+    event-time operator.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ts_type = dict(
-        spark.read.parquet(f"{sf_dir}/events.parquet").dtypes
-    ).get("ts")
+    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     # File-source streams take a directory; glob-filter to the events table.
-    reader = (
+    raw = (
         spark.readStream.option("maxFilesPerTrigger", 1)
         .option("pathGlobFilter", "events.parquet")
+        .schema(schema)
+        .parquet(sf_dir)
     )
-    if ts_type == "bigint":
-        raw = reader.schema(_RAW_SCHEMA).parquet(sf_dir)
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if ts_type == "timestamp_ntz":
-        ntz = StructType(
-            [
-                StructField("event_id", LongType()),
-                StructField("ts", TimestampNTZType()),
-                StructField("user_id", LongType()),
-                StructField("event_type", StringType()),
-                StructField("value", DoubleType()),
-                StructField("props", StringType()),
-            ]
-        )
-        raw = reader.schema(ntz).parquet(sf_dir)
-        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return reader.schema(EVENTS_SCHEMA).parquet(sf_dir)
+    return normalise_events_ts(raw)
 
 
 def tumbling_counts(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -141,24 +98,6 @@ def session_windows(stream: DataFrame, gap: str = "30 minutes", watermark: str =
             "n_events",
             "total_value",
         )
-    )
-
-
-def dedup_events(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Streaming exact dedup on event_id within the watermark horizon —
-    the streaming member of the dedup operator family."""
-    return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-
-
-def dedup_keyed(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Streaming keyed dedup: first event per (user_id, event_type) within
-    the watermark horizon — streaming twin of q40_first_event_dedup (which
-    dedups globally; equivalence holds when all duplicates of a key arrive
-    inside one horizon)."""
-    return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["user_id", "event_type"]
     )
 
 
@@ -225,9 +164,9 @@ def first_event_agg(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
     min(struct(ts, event_id)) + count.
 
     Deterministic under ANY arrival order — unlike
-    ``dropDuplicatesWithinWatermark`` (dedup_keyed), which keeps the
-    first-ARRIVED row and therefore can't be hash-verified against a
-    batch oracle on unordered sources. State per key is one struct +
+    ``dedup_within_watermark``, which keeps the first-ARRIVED row and
+    therefore can't be hash-verified against a batch oracle on unordered
+    sources. State per key is one struct +
     one counter, watermark-bounded."""
     return (
         stream.withWatermark("ts", watermark)

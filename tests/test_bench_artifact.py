@@ -5,8 +5,9 @@ shape genuinely changes."""
 
 from __future__ import annotations
 
-import sys
 import pathlib
+import re
+import sys
 
 import pyspark.sql.functions as F
 
@@ -49,3 +50,29 @@ def test_fingerprint_on_registry_headline(spark):
     a = plan_fingerprint(q.spark(spark, SF_DIR))
     b = plan_fingerprint(q.spark(spark, SF_DIR))
     assert a == b
+
+
+def _lambda_scan(spark):
+    from synth_transform_spark.sources.readers import load_table
+
+    docs = load_table(spark, SF_DIR, "documents")
+    hit = F.exists(F.split("text", " "), lambda t: t == "needle")
+    return docs.filter(hit & (F.length("text") > 3)).select("doc_id")
+
+
+def _next_lambda_id() -> int:
+    probe = str(F.transform(F.array(), lambda x: x))
+    return int(re.search(r"x_(\d+)", probe).group(1)) + 1
+
+
+def test_fingerprint_ignores_lambda_id_width(spark):
+    # The FileScan's DataFilters list renders past Spark's 100-char
+    # metadata cut, with lambda variable ids inside it. Building other
+    # lambdas until the ids gain a digit moves that cut; the fingerprint
+    # must not move with it.
+    a = plan_fingerprint(_lambda_scan(spark))
+    n = _next_lambda_id()
+    for _ in range(10 ** len(str(n)) - n):
+        F.transform(F.array(), lambda x: x)
+    assert len(str(_next_lambda_id())) > len(str(n))
+    assert plan_fingerprint(_lambda_scan(spark)) == a

@@ -67,3 +67,61 @@ def test_every_package_import_resolves():
         if importlib.util.find_spec(top) is None
     }
     assert not missing, missing
+
+
+def _tokenizer_copy(node) -> str | None:
+    """'raw' or 'lower' when ``node`` is an inline copy of
+    ``text_analysis.tokens_raw`` / ``tokens_lower``:
+    ``F.filter(F.split(x, " "), lambda t: t != "")``, with ``x`` wrapped
+    in ``F.lower`` for the lowercased one."""
+    import ast
+
+    def f_call(n, name, nargs):
+        return (
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == name
+            and isinstance(n.func.value, ast.Name)
+            and n.func.value.id == "F"
+            and len(n.args) == nargs
+            and not n.keywords
+        )
+
+    if not f_call(node, "filter", 2):
+        return None
+    split, lam = node.args
+    if not (
+        f_call(split, "split", 2)
+        and isinstance(split.args[1], ast.Constant)
+        and split.args[1].value == " "
+        and isinstance(lam, ast.Lambda)
+        and len(lam.args.args) == 1
+    ):
+        return None
+    body, var = lam.body, lam.args.args[0].arg
+    if not (
+        isinstance(body, ast.Compare)
+        and isinstance(body.ops[0], ast.NotEq)
+        and isinstance(body.left, ast.Name)
+        and body.left.id == var
+        and isinstance(body.comparators[0], ast.Constant)
+        and body.comparators[0].value == ""
+    ):
+        return None
+    return "lower" if f_call(split.args[0], "lower", 1) else "raw"
+
+
+def test_no_inline_tokenizer_copies():
+    """The whitespace tokenizers have one owner each, ``tokens_raw`` and
+    ``tokens_lower`` in operators/text_analysis.py; an inline copy
+    elsewhere is a second place to change when the token rule moves."""
+    import ast
+
+    copies = [
+        f"{path.relative_to(ROOT)}:{node.lineno} ({kind})"
+        for path in sorted((ROOT / "synth_transform_spark").rglob("*.py"))
+        if path.name != "text_analysis.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if (kind := _tokenizer_copy(node))
+    ]
+    assert not copies, copies

@@ -253,20 +253,6 @@ class TestPartialRatio:
             assert (w > 50) == (e > 50), (a, b, w, e)
         assert got[0] == 100  # containment is exact in both variants
 
-    def test_udf_matches_pure_python(self, spark):
-        from synth_transform_spark.functions.fuzzy import (
-            partial_ratio,
-            partial_ratio_udf,
-        )
-
-        rows = [("abcdef", "xxabcdefyy"), ("hello world", "goodbye moon"), (None, "x")]
-        df = spark.createDataFrame(rows, "a string, b string")
-        got = [
-            r["pr"]
-            for r in df.select(partial_ratio_udf()(F.col("a"), F.col("b")).alias("pr")).collect()
-        ]
-        assert got == [partial_ratio(a, b) for a, b in rows]
-
 
 class TestPorterStemming:
     """F16 parity tier: pure-Python original Porter (1980) + the notebook

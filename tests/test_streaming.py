@@ -3,6 +3,8 @@ availableNow trigger, must produce the same result as its batch twin."""
 
 from __future__ import annotations
 
+import pathlib
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -82,7 +84,7 @@ def test_keyed_dedup_stream_keys_match_batch(spark):
     from synth_transform_spark.plans.events_queries import q40_first_event_dedup
 
     out = se.run_available_now(
-        se.dedup_keyed(_stream(spark)), "t_keyed_dedup", output_mode="append"
+        se.dedup_within_watermark(_stream(spark)), "t_keyed_dedup", output_mode="append"
     )
     batch = q40_first_event_dedup(spark, SF_DIR)
     # one surviving event per key on both sides, same key set (the streaming
@@ -125,7 +127,9 @@ def test_stateful_running_totals_match_batch(spark):
 
 def test_streaming_dedup_drops_injected_duplicates(spark):
     out = se.run_available_now(
-        se.dedup_events(_stream(spark)), "t_dedup", output_mode="append"
+        se.dedup_within_watermark(_stream(spark), ("event_id",)),
+        "t_dedup",
+        output_mode="append",
     )
     ev = load_table(spark, SF_DIR, "events")
     assert out.count() == ev.select("event_id").distinct().count()
@@ -151,3 +155,40 @@ def test_interval_join_stream_matches_batch_range_join(spark):
     assert s == b
     n_zero = sum(1 for r in batch.itertuples() if r.n_in_range == 0)
     assert len(batch) == len(s) + n_zero
+
+
+def test_events_ts_physical_types_read_alike(spark, tmp_path):
+    """``events.ts`` written as INT64 TIMESTAMP(NANOS) and as naive
+    timestamp[us] (both seen in testdata generations) reads as the same
+    UTC microseconds through the batch and the stream reader; the nanos
+    are truncated, as DuckDB's ns→µs cast does."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    nanos = [1704067200_123456789, 1704070800_000000999, 1704153600_999999999]
+    micros = [ns // 1000 for ns in nanos]
+    got = {}
+    for unit, values in (("ns", nanos), ("us", micros)):
+        table = pa.table(
+            {
+                "event_id": pa.array([1, 2, 3], pa.int64()),
+                "ts": pa.array(values, pa.timestamp(unit)),
+                "user_id": pa.array([7, 7, 8], pa.int64()),
+                "event_type": ["view", "click", "view"],
+                "value": [1.0, 2.0, 3.0],
+                "props": ["{}", "{}", "{}"],
+            }
+        )
+        sf_dir = str(tmp_path / unit)
+        pathlib.Path(sf_dir).mkdir()
+        pq.write_table(table, f"{sf_dir}/events.parquet")
+        batch = load_table(spark, sf_dir, "events")
+        stream = se.run_available_now(
+            se.read_events_stream(spark, sf_dir), f"t_events_ts_{unit}"
+        )
+        for how, df in (("batch", batch), ("stream", stream)):
+            rows = df.select("event_id", F.unix_micros("ts")).collect()
+            got[unit, how] = [us for _, us in sorted(rows)]
+    nanos_type = pq.read_schema(f"{tmp_path}/ns/events.parquet").field("ts").type
+    assert nanos_type == pa.timestamp("ns")
+    assert got == {key: micros for key in got}

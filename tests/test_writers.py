@@ -1,16 +1,15 @@
-"""Sink-surface tests: partition pruning and bucketed shuffle-free joins
-must be visible in the physical plan, not just assumed."""
+"""Sink-surface tests: partition pruning must be visible in the physical
+plan, not just assumed (the bucketed shuffle-free join is pinned in
+tests/test_bucketed.py)."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-import pytest
 
 from conftest import SF_DIR
 from synth_transform_spark.sources.readers import load_table
 from synth_transform_spark.sources.writers import (
     read_partitioned,
-    write_bucketed,
     write_partitioned,
 )
 
@@ -43,39 +42,6 @@ def test_partitioned_write_row_fidelity(spark, tmp_path):
     a = sorted((r.doc_id, r.text) for r in back.select("doc_id", "text").collect())
     b = sorted((r.doc_id, r.text) for r in docs.select("doc_id", "text").collect())
     assert a == b
-
-
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    import shutil
-
-    for t in ("b_customer", "b_orders"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-    cust = load_table(spark, SF_DIR, "customer")
-    orders = load_table(spark, SF_DIR, "orders")
-    try:
-        write_bucketed(cust, "b_customer", ["c_custkey"], 8)
-        write_bucketed(
-            orders.withColumnRenamed("o_custkey", "c_custkey"),
-            "b_orders",
-            ["c_custkey"],
-            8,
-        )
-    except Exception as ex:  # catalog unavailable in some harnesses
-        pytest.skip(f"managed tables unavailable: {ex}")
-    bc = spark.table("b_customer")
-    bo = spark.table("b_orders")
-    # force SMJ (AQE would broadcast these small tables) to show the
-    # bucketing contract: no exchange on either side
-    joined = bc.hint("merge").join(bo.hint("merge"), "c_custkey")
-    plan = _plan(joined)
-    # bucketed sort-merge join: no Exchange on either side of the join
-    join_section = plan[plan.find("SortMergeJoin"):]
-    assert "SortMergeJoin" in plan
-    assert "Exchange hashpartitioning" not in plan
-    assert joined.count() > 0
-    spark.sql("DROP TABLE IF EXISTS b_customer")
-    spark.sql("DROP TABLE IF EXISTS b_orders")
 
 
 def test_orc_round_trip_with_pushdown(spark, tmp_path):
