@@ -23,6 +23,7 @@ import sys
 from pyspark.sql import DataFrame, SparkSession
 
 from .pipeline.resources import WORKBOOK_SHEETS
+from .sources.readers import read_parquet
 
 SOURCE_TABLES = (
     "NHM_Call",
@@ -70,7 +71,7 @@ def structtype_code(df: DataFrame, name: str) -> str:
 
 def cmd_generate(args) -> int:
     spark = _spark("synth-generate")
-    df = spark.read.parquet(args.input)
+    df = read_parquet(spark, args.input)
     name = args.name or os.path.splitext(os.path.basename(args.input))[0]
     print("from pyspark.sql.types import *\n")
     print(structtype_code(df, name.replace("-", "_").upper() + "_SCHEMA"))
@@ -83,7 +84,7 @@ def read_inputs(spark: SparkSession, sources_dir: str, resources_dir: str):
     from .pipeline.steps import Resources
 
     def read(d: str, name: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(d, f"{name}.parquet"))
+        return read_parquet(spark, os.path.join(d, f"{name}.parquet"))
 
     sources = {t: read(sources_dir, t) for t in SOURCE_TABLES}
     res = Resources(
@@ -108,7 +109,7 @@ def cmd_rebuild(args) -> int:
             continue
         path = os.path.join(args.out, f"{name}.parquet")
         tables[name].write.mode("overwrite").parquet(path)
-        counts[name] = spark.read.parquet(path).count()
+        counts[name] = read_parquet(spark, path).count()
     print(json.dumps({"rebuilt": counts}))
     return 0
 
@@ -139,13 +140,13 @@ def cmd_update(args) -> int:
     spark = _spark("synth-update")
     # cache tables use the canonical column name `key` regardless of the
     # source key column
-    universe = spark.read.parquet(args.keys).select(
+    universe = read_parquet(spark, args.keys).select(
         F.col(args.key_col).cast("string").alias("key")
     )
     cache = None
     had_doi = False
     if os.path.exists(args.cache):
-        cache = spark.read.parquet(args.cache)
+        cache = read_parquet(spark, args.cache)
         # `doi` is a DERIVED column (deterministic re-parse of payload):
         # drop it before the refresh union so the fetched delta's schema
         # matches; it is re-derived over the whole cache below whenever
@@ -176,7 +177,7 @@ def cmd_update(args) -> int:
     n = new_cache.count()
     tmp = args.cache + ".staging"
     new_cache.write.mode("overwrite").parquet(tmp)
-    final = spark.read.parquet(tmp)
+    final = read_parquet(spark, tmp)
     final.write.mode("overwrite").parquet(args.cache)
     new_cache.unpersist()
     # the staging copy is only a write-ordering device (never overwrite the
@@ -197,7 +198,7 @@ def cmd_dump(args) -> int:
     for name in TABLE_ORDER:
         path = os.path.join(args.warehouse, f"{name}.parquet")
         if os.path.exists(path):
-            tables[name] = spark.read.parquet(path)
+            tables[name] = read_parquet(spark, path)
     counts = dump_database(tables, TABLE_ORDER, args.out)
     print(json.dumps({"dumped": counts}))
     return 0

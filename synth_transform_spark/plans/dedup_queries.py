@@ -1374,7 +1374,6 @@ def q383_double_sweep_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     from ..operators import graph
-    from ..sources.readers import load_table as _lt
 
     li = load_table(spark, sf_dir, "lineitem")
     items = li.select("l_orderkey", "l_partkey").distinct()

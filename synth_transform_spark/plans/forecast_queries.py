@@ -8,7 +8,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..operators import windows
 from ..sources.readers import load_table
 from .registry import register
 

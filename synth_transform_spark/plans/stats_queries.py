@@ -2482,7 +2482,6 @@ def q386_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = sample.groupBy("source", "lang").agg(
         F.count(F.lit(1)).alias("n")
     ).withColumn("w", F.lit(1000000).cast("long"))
-    from ..caching import persist_tracked
 
     s_src = sample.select("source").distinct()
     s_lang = sample.select("lang").distinct()

@@ -6,9 +6,8 @@ a batch oracle twin. Split from events_queries.py (round 6).
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
-from ..operators import windows
 from ..sources.readers import load_table
 from .registry import register
 

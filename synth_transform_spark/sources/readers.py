@@ -7,14 +7,29 @@ workbooks, JSON lookup maps, and KV cache tables — see ``ingest.py``.
 
 Parquet is the scale path: columnar scan with predicate pushdown, column
 pruning and row-group min/max pruning all handled by the native reader.
+Each parquet read takes its schema from the file footer
+(``parquet_schema``), so reading a table launches no Spark job.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    DataType,
+    LongType,
+    MapType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 #: The driver's star schema + extension tables (TESTDATA.md).
 TABLES = (
@@ -56,9 +71,127 @@ def normalise_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+#: Footer key under which Spark stores the schema of a file it wrote.
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+#: Arrow leaf types whose parquet column Spark infers as ``from_arrow_type``
+#: maps them (timestamps and binaries are mapped in ``_leaf_type``).
+_EXACT_LEAVES = (
+    "is_boolean", "is_int8", "is_int16", "is_int32", "is_int64",
+    "is_float32", "is_float64", "is_decimal128", "is_string",
+    "is_large_string", "is_date32",
+)
+
+
+def _footer_file(path: str) -> str:
+    """The file whose footer Spark's schema inference reads for ``path``:
+    the file itself, or the first data file of a directory in path order
+    (names starting with ``_`` or ``.``, such as ``_SUCCESS`` and checksum
+    files, are not data)."""
+    if not os.path.isdir(path):
+        return path
+    data = sorted(n for n in os.listdir(path) if not n.startswith(("_", ".")))
+    if not data:
+        raise ValueError(f"{path}: no parquet data file to take a schema from")
+    return os.path.join(path, data[0])
+
+
+def _nullable(node):
+    """A Spark schema's JSON with every field, element and map value
+    nullable, as Spark reads any file schema (``asNullable``)."""
+    if isinstance(node, list):
+        return [_nullable(v) for v in node]
+    if not isinstance(node, dict):
+        return node
+    return {
+        k: True if k in ("nullable", "containsNull", "valueContainsNull")
+        else v if k == "metadata" else _nullable(v)
+        for k, v in node.items()
+    }
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, built from the parquet
+    footer with no Spark job.
+
+    Spark's rules: a footer carrying ``SPARK_SCHEMA_KEY`` (a file Spark
+    wrote) declares its schema; otherwise each field maps as
+    ``from_arrow_type`` maps its arrow type, except that a naive timestamp
+    is TIMESTAMP_NTZ only under ``spark.sql.parquet.inferTimestampNTZ.enabled``,
+    INT64 TIMESTAMP(NANOS) is BIGINT under
+    ``spark.sql.legacy.parquet.nanosAsLong`` and INT96 is a timestamp.
+    Every field is nullable, as Spark reads it. A footer type with no exact
+    Spark equivalent raises ``ValueError`` naming the path, column and
+    type."""
+    import pyarrow.parquet as pq
+
+    with pq.ParquetFile(_footer_file(path)) as footer:
+        declared = (footer.metadata.metadata or {}).get(SPARK_SCHEMA_KEY)
+        if declared is not None:
+            return StructType.fromJson(_nullable(json.loads(declared)))
+        leaves = iter(footer.schema)
+        return StructType([
+            StructField(f.name, _spark_type(spark, path, f.name, f.type, leaves))
+            for f in footer.schema_arrow
+        ])
+
+
+def _spark_type(spark: SparkSession, path: str, column: str, at, leaves) -> DataType:
+    """Spark type of the arrow type ``at`` of ``column``; ``leaves`` yields
+    the footer's leaf columns depth first, the order of the arrow leaves."""
+    import pyarrow.types as pat
+
+    if pat.is_struct(at):
+        return StructType([
+            StructField(f.name, _spark_type(spark, path, f"{column}.{f.name}", f.type, leaves))
+            for f in at
+        ])
+    if pat.is_list(at) or pat.is_large_list(at) or pat.is_fixed_size_list(at):
+        return ArrayType(_spark_type(spark, path, column, at.value_type, leaves))
+    if pat.is_map(at):
+        key = _spark_type(spark, path, column, at.key_type, leaves)
+        return MapType(key, _spark_type(spark, path, column, at.item_type, leaves))
+    if pat.is_dictionary(at):
+        at = at.value_type
+    return _leaf_type(spark, path, column, at, next(leaves))
+
+
+def _leaf_type(spark: SparkSession, path: str, column: str, at, leaf) -> DataType:
+    """Spark type of one footer leaf column ``leaf``, read by pyarrow as
+    ``at``."""
+    import pyarrow.types as pat
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    def flag(key: str, default: str) -> bool:
+        return spark.conf.get(key, default).lower() == "true"
+
+    logical = leaf.logical_type.type
+    if leaf.physical_type == "INT96" and flag("spark.sql.parquet.int96AsTimestamp", "true"):
+        return TimestampType()
+    if pat.is_timestamp(at) and logical == "TIMESTAMP":
+        ts = json.loads(leaf.logical_type.to_json())
+        if ts["timeUnit"] != "nanoseconds":
+            ntz = not ts["isAdjustedToUTC"] and flag("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+            return TimestampNTZType() if ntz else TimestampType()
+        if flag("spark.sql.legacy.parquet.nanosAsLong", "false"):
+            return LongType()
+    elif (pat.is_binary(at) or pat.is_large_binary(at)) and logical == "NONE":
+        return StringType() if flag("spark.sql.parquet.binaryAsString", "false") else BinaryType()
+    elif pat.is_fixed_size_binary(at) and logical == "NONE":
+        return BinaryType()
+    elif any(getattr(pat, check)(at) for check in _EXACT_LEAVES):
+        return from_arrow_type(at)
+    raise ValueError(
+        f"{path}: column {column!r} has parquet type {leaf.physical_type} "
+        f"({leaf.logical_type}, arrow {at}) with no exact Spark type"
+    )
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver table. Column pruning/pushdown left to Catalyst;
-    ``events.ts`` goes through ``normalise_events_ts``."""
+    """Read one driver table, its schema taken from the footer
+    (``parquet_schema``), so the read launches no Spark job. Column
+    pruning/pushdown left to Catalyst; ``events.ts`` goes through
+    ``normalise_events_ts``."""
     # Defensive session settings: the driver supplies its own SparkSession,
     # which may run ANSI-on (Spark 4 default) and a non-UTC session timezone.
     # The engine's declared semantics are null-on-failure casts and
@@ -66,10 +199,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # path funnels through this loader.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.ansi.enabled", "false")
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalise_events_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        return normalise_events_ts(read_parquet(spark, path))
+    return read_parquet(spark, path)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema ``parquet_schema`` takes
+    from the footer instead of a schema-inference job."""
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
 
 
 def load_jdbc(

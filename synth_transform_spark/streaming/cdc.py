@@ -23,7 +23,7 @@ so a hot key costs one window partition per batch, not a bigger join.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 
 
 def latest_per_key(df: DataFrame, key_cols: list[str], order_cols: list[str]) -> DataFrame:

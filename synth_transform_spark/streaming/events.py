@@ -24,22 +24,21 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.readers import normalise_events_ts
+from ..sources.readers import normalise_events_ts, parquet_schema
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet, normalised to LTZ-µs
     ``ts`` by the batch reader's ``normalise_events_ts``.
 
-    A file-source stream needs a declared schema; it is taken from the
-    file footer with a batch read (metadata only, no scan), so the stream
-    sees the same physical ``ts`` type as ``load_table`` — a wrong static
-    schema would silently reinterpret raw values and corrupt every
-    event-time operator.
+    A file-source stream needs a declared schema; it is the footer schema
+    ``load_table`` reads with (``parquet_schema``, no Spark job), so the
+    stream sees the same physical ``ts`` type — a wrong static schema would
+    silently reinterpret raw values and corrupt every event-time operator.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     # File-source streams take a directory; glob-filter to the events table.
     raw = (
         spark.readStream.option("maxFilesPerTrigger", 1)

@@ -69,6 +69,39 @@ def test_every_package_import_resolves():
     assert not missing, missing
 
 
+#: Imports kept for their side effect: the catalog imports the plans
+#: package so that every query is registered before it renders.
+SIDE_EFFECT_IMPORTS = {"synth_transform_spark/plans/catalog.py:synth_transform_spark"}
+
+
+def test_no_unused_imports():
+    """Every name an import binds under synth_transform_spark/ is used in
+    its module; package ``__init__.py`` files are exempt, their imports are
+    the package's exports."""
+    import ast
+
+    unused = []
+    for path in sorted((ROOT / "synth_transform_spark").rglob("*.py")):
+        if path.name == "__init__.py":
+            continue
+        tree = ast.parse(path.read_text())
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        rel = path.relative_to(ROOT).as_posix()
+        for node in _statements(tree.body):
+            if isinstance(node, ast.Import):
+                bound = [a.asname or a.name.split(".")[0] for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+                bound = [a.asname or a.name for a in node.names]
+            else:
+                continue
+            unused += [
+                f"{rel}:{node.lineno} {name}"
+                for name in bound
+                if name not in used and f"{rel}:{name}" not in SIDE_EFFECT_IMPORTS
+            ]
+    assert not unused, unused
+
+
 def _tokenizer_copy(node) -> str | None:
     """'raw' or 'lower' when ``node`` is an inline copy of
     ``text_analysis.tokens_raw`` / ``tokens_lower``:
