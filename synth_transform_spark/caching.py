@@ -1,8 +1,7 @@
 """Session-scoped cache tracking.
 
 Operators that persist intermediates mid-pipeline (two-consumer relations:
-``assign_ids_scalable``'s partitioned input, the LSH band relation, the
-shingle arrays) cannot unpersist before their caller has consumed the
+the LSH band relation, the shingle arrays) cannot unpersist before their caller has consumed the
 result — but a long-lived session running many queries would otherwise
 accumulate cached blocks indefinitely. ``persist_tracked`` registers every
 such persist; hosts (bench.py's query loop, test fixtures, the CLI after
@@ -13,8 +12,8 @@ NOT a durability guarantee — on executor loss the lineage recomputes, and
 a nondeterministically-partitioned lineage (``repartitionByRange`` samples
 boundaries per execution) can recompute DIFFERENT partitions. Pipelines
 whose correctness depends on frozen partitioning across multiple jobs
-(ids.py's offset map) should use ``localCheckpoint``/``checkpoint`` on a
-real cluster; ``persist_tracked(df, checkpoint=True)`` opts in.
+should use ``localCheckpoint``/``checkpoint`` on a real cluster;
+``persist_tracked(df, checkpoint=True)`` opts in.
 
 ``iterate`` runs the rounds of every iterative operator (graph, k-means,
 BPE, greedy selection): the one place a per-round ``localCheckpoint`` is
@@ -62,13 +61,12 @@ def release_cached(blocking: bool = False) -> int:
 
     Contract: call only AFTER the consuming action of every plan built on a
     tracked persist has completed — i.e. between units of work, not mid-query.
-    Plans that baked driver-side state derived from a persisted relation
-    (``assign_ids_scalable``'s collected pid→offset map over a
-    ``repartitionByRange`` input) must NOT be re-executed after release: the
-    range partitioner resamples boundaries on recompute, so the baked offsets
-    would silently mis-assign ids. Re-executing such a plan requires either
-    rebuilding it or having persisted with ``checkpoint=True`` (lineage
-    truncated, recompute impossible)."""
+    A plan that baked driver-side state derived from a persisted relation
+    with nondeterministic partitioning must NOT be re-executed after
+    release: a recompute can give different partitions than the baked state
+    describes. Re-executing such a plan requires either rebuilding it or
+    having persisted with ``checkpoint=True`` (lineage truncated, recompute
+    impossible)."""
     n = 0
     while _TRACKED:
         df = _TRACKED.pop()

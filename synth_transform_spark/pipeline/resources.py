@@ -114,10 +114,13 @@ def city_name_index(cities: DataFrame) -> DataFrame:
     per-row scan over ~25k cities (etl.py:689-696)."""
     from ..operators.ids import assign_ids_scalable
 
-    # deterministic city identity; the two-pass assigner keeps even this
-    # seed table off the single-reducer path (geonames is ~25k rows today
-    # but a full gazetteer is 12M+)
-    base = assign_ids_scalable(cities, ["name", "countrycode"], "city_id")
+    # deterministic city identity; the range-partitioned assigner keeps even
+    # this seed table off the single-reducer path (geonames is ~25k rows
+    # today but a full gazetteer is 12M+). It numbers a relation of exactly
+    # its order columns, so every column the index reads is an order column:
+    # population and alternatenames break (name, countrycode) ties.
+    cols = ["name", "countrycode", "population", "alternatenames"]
+    base = assign_ids_scalable(cities.select(*cols), cols, "city_id")
     names = base.select(
         "city_id",
         "countrycode",

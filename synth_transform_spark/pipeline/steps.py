@@ -10,7 +10,8 @@ anti-patterns removed by construction).
 ID determinism: the reference assigns dense ids with ``itertools.count(1)``
 while iterating ordered streams (SURVEY.md §2.5 W1). Here
 ``operators.ids.assign_ids_window`` reproduces the identical numbering; the
-scalable two-pass variant is a drop-in swap at cluster scale.
+scalable ``assign_ids_scalable`` is a drop-in swap at cluster scale for a
+relation of exactly its order columns.
 """
 
 from __future__ import annotations

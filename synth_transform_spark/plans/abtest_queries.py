@@ -562,7 +562,7 @@ def q278_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Parity: scores frozen to round(10^4 * value); all counts/U integer.
 # Scale: the corpus collapses to the score-domain relation first (one
 # keyed aggregate); the cum window runs over distinct scores, not rows
-# (range-partitioned two-pass at 100 TB, the ids.py pattern - declared
+# (range-partitioned offsets at 100 TB, the ids.py pattern - declared
 # bounded-domain exception at test scale).
 # --------------------------------------------------------------------------
 @register(

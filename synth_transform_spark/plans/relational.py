@@ -306,11 +306,12 @@ def q11_positional_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q12 — deterministic surrogate-ID assignment (SURVEY §2.5 W1;
-# /root/reference/synth/etl.py:215-223 et al.) — scalable two-pass mode
-# (repartitionByRange + in-partition row_number + broadcast offsets; the
-# single-partition window mode stays available for bounded dims and is
-# equivalence-tested against this one).
+# q12 — deterministic surrogate-ID assignment (SURVEY §2.5 W1; reference
+# synth/etl.py:215-223 et al.) — scalable mode, one plan
+# (repartitionByRange + in-partition position + broadcast prefix-sum
+# offsets over the reused range exchange; the single-partition window mode
+# stays available for bounded dims and is equivalence-tested against this
+# one in tests/test_ids.py).
 # --------------------------------------------------------------------------
 @register(
     "q12_surrogate_ids",

@@ -979,7 +979,7 @@ def q254_knn_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
     set, map-side integer aggregation). The per-query sorted suffix scan
     is the algorithm's sequential core; it runs as a per-query window
     here, and at 100 TB becomes a range-partitioned sort per query with
-    a two-pass per-range suffix offset (the ids.py two-pass pattern)."""
+    a per-range suffix offset (the ids.py prefix-offset pattern)."""
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 

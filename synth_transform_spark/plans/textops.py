@@ -1026,9 +1026,9 @@ def q152_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Deterministic training-epoch shuffles: per epoch, every doc gets a
     # dense position by md5(epoch:doc_id) order — reproducible data
     # ordering across runs/engines, the standard seeded-shuffle contract
-    # of a training pipeline. Uses the SCALABLE two-pass assigner (q12's
-    # W1 operator) per epoch: repartitionByRange on the shuffle key +
-    # per-partition offsets — never a global-sort window.
+    # of a training pipeline. Uses the SCALABLE assigner (q12's W1
+    # operator) per epoch: repartitionByRange on the shuffle key +
+    # per-partition offsets in the same plan — never a global-sort window.
     oracle="""
 WITH keyed AS (
     SELECT doc_id,
@@ -1053,12 +1053,14 @@ def q155_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.concat(F.lit("0:"), F.col("doc_id").cast("string"))).alias("k0"),
         F.md5(F.concat(F.lit("1:"), F.col("doc_id").cast("string"))).alias("k1"),
     )
-    e0 = assign_ids_scalable(keyed, ["k0"], "epoch0_pos").select(
-        "doc_id", "epoch0_pos"
-    )
-    e1 = assign_ids_scalable(keyed, ["k1"], "epoch1_pos").select(
-        F.col("doc_id").alias("d1"), "epoch1_pos"
-    )
+    # k is the md5 of a unique doc_id, so (k, doc_id) orders as k alone;
+    # assign_ids_scalable numbers a relation of exactly its order columns
+    e0 = assign_ids_scalable(
+        keyed.select("k0", "doc_id"), ["k0", "doc_id"], "epoch0_pos"
+    ).select("doc_id", "epoch0_pos")
+    e1 = assign_ids_scalable(
+        keyed.select("k1", "doc_id"), ["k1", "doc_id"], "epoch1_pos"
+    ).select(F.col("doc_id").alias("d1"), "epoch1_pos")
     return e0.join(e1, e0["doc_id"] == e1["d1"]).select(
         "doc_id", "epoch0_pos", "epoch1_pos"
     )
@@ -2454,8 +2456,9 @@ def q280_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 # join, no float anywhere.
 # Scale: the within-source rank is a W2 partitioned window; the GLOBAL
 # rank reuses operators/ids.assign_ids_scalable (repartitionByRange +
-# per-partition offsets - NO single-reducer sort); the mapping join is
-# keyed on the dense global position.
+# per-partition offsets - NO single-reducer sort) over (n_chars, doc_id)
+# alone, and source joins back on doc_id; the mapping join is keyed on
+# the dense global position.
 # --------------------------------------------------------------------------
 @register(
     "q293_quantile_normalize",
@@ -2495,7 +2498,9 @@ def q293_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    g = assign_ids_scalable(docs, ["n_chars", "doc_id"], id_name="gr")
+    g = assign_ids_scalable(
+        docs.select("n_chars", "doc_id"), ["n_chars", "doc_id"], id_name="gr"
+    ).join(docs.select("doc_id", "source"), "doc_id")
     nn_df = g.agg(F.count(F.lit(1)).alias("nn"))
     ws = Window.partitionBy("source").orderBy("n_chars", "doc_id")
     wn = Window.partitionBy("source")

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -11,6 +13,23 @@ def spark():
 
     s = get_spark("synth-transform-tests")
     yield s
+
+
+@contextlib.contextmanager
+def session_conf(spark, confs: dict):
+    """Set ``confs`` on the shared session for the block, then restore each
+    key's earlier value (unset when it had none)."""
+    before = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 @pytest.fixture(autouse=True)
@@ -60,9 +79,11 @@ def pipeline_dirs(spark, tmp_path_factory):
     tables and the row-built resources are written by pyarrow; the resources
     only a loader builds (users, workbook sheets, city-name index) by Spark.
     Every table must read back with the schema it was built with (a
-    timestamp must not come back as TIMESTAMP_NTZ)."""
+    timestamp must not come back as TIMESTAMP_NTZ); the schema is taken
+    from the footer by ``parquet_schema``, which runs no Spark job."""
     from pipeline_fixtures import build_resources, build_sources, resource_rows, source_rows
     from synth_transform_spark.cli import RESOURCE_TABLES, SOURCE_TABLES
+    from synth_transform_spark.sources.readers import parquet_schema
 
     root = tmp_path_factory.mktemp("pipeline")
     src_dir, res_dir = root / "sources", root / "resources"
@@ -79,7 +100,7 @@ def pipeline_dirs(spark, tmp_path_factory):
             _write_rows(path, df.schema, rows[base.name][1])
         else:
             df.write.mode("overwrite").parquet(path)
-        back = spark.read.parquet(path).schema.simpleString()
+        back = parquet_schema(spark, path).simpleString()
         if back != df.schema.simpleString():
             raise AssertionError(f"{path} reads back as {back}, built as {df.schema.simpleString()}")
     return root, src_dir, res_dir

@@ -7,20 +7,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-
-def _with_confs(spark, confs):
-    old = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    return old
-
-
-def _restore(spark, old):
-    for k, v in old.items():
-        if v is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, v)
+from conftest import session_conf
 
 
 def test_aqe_splits_skewed_join(spark):
@@ -34,8 +21,7 @@ def test_aqe_splits_skewed_join(spark):
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
         "spark.sql.autoBroadcastJoinThreshold": "-1",  # force SMJ
     }
-    old = _with_confs(spark, confs)
-    try:
+    with session_conf(spark, confs):
         left = spark.range(0, 20000).select(
             F.when(F.col("id") % 10 != 0, F.lit(7)).otherwise(F.col("id")).alias("k"),
             F.concat(F.lit("payload-"), F.col("id")).alias("pad"),
@@ -45,8 +31,6 @@ def test_aqe_splits_skewed_join(spark):
         joined.collect()
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "isSkew=true" in plan or "OptimizeSkewedJoin" in plan or "skewed=" in plan.lower() or "(skew=" in plan
-    finally:
-        _restore(spark, old)
 
 
 def test_aqe_coalesces_shuffle_partitions(spark):

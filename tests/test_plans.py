@@ -183,14 +183,15 @@ def test_registry_plan_hygiene(spark):
        until it is either day-sharded (operators/windows.py sharded_gaps)
        or audited into BOUNDED_WINDOW_OK with its boundedness argument.
     """
-    py_off, cart_off, win_off = [], [], []
+    py_off, cart_off, win_off, raised = [], [], [], []
     for name, q in sorted(REGISTRY.items()):
         if name in HEAVY_EXECUTING:
             continue
         try:
             plan = _plan(q.spark(spark, SF_DIR))
-        except Exception:
-            continue  # iterative/stateful plans may need an action; skip
+        except Exception as e:  # a plan the lint cannot see is a failure
+            raised.append(f"{name}: {type(e).__name__}: {str(e)[:200]}")
+            continue
         if name not in PYTHON_OK and (
             "BatchEvalPython" in plan or "ArrowEvalPython" in plan
         ):
@@ -201,9 +202,36 @@ def test_registry_plan_hygiene(spark):
             plan
         ):
             win_off.append(name)
+    assert raised == [], f"build raised: {raised}"
     assert py_off == [], f"python in relational path: {py_off}"
     assert cart_off == [], f"cartesian product: {cart_off}"
     assert win_off == [], f"corpus-scaled single-partition window: {win_off}"
+
+
+# Headline (bench=True) queries that may launch Spark jobs while their
+# DataFrame is built, with a ceiling each. Every other headline query
+# builds with none: its plan can be explained, fingerprinted and linted
+# without running it (ROADMAP direction 2). Lower a ceiling when a change
+# removes jobs; never raise one.
+BUILD_JOB_CEILING = {
+    # eager checkpoint of the candidate pairs (the two-consumer cache race,
+    # OPTIMIZATION_r11.md §10); ROADMAP direction 2 names its removal
+    "q27_minhash_near_dups": 4,
+}
+
+
+def test_headline_builds_launch_no_job(spark):
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    over = {}
+    for name, q in sorted(REGISTRY.items()):
+        if not q.bench:
+            continue
+        j0 = dag.nextJobId()
+        q.spark(spark, SF_DIR)
+        jobs = dag.nextJobId() - j0
+        if jobs > BUILD_JOB_CEILING.get(name, 0):
+            over[name] = jobs
+    assert over == {}, f"build-time Spark jobs over the ceiling: {over}"
 
 
 def test_codegen_covers_hot_queries(spark):
@@ -226,9 +254,10 @@ def test_temporal_joins_avoid_nested_loops(spark):
 
 
 def test_no_single_partition_windows(spark):
-    """q12 must show a range-partition exchange (two-pass ids), and q14 must
-    contain no Window at all (global scalars come from agg + broadcast) —
-    both previously funneled the whole input through one reducer."""
+    """q12 must show a range-partition exchange (ids numbered per range
+    partition, offsets from that one reused exchange), and q14 must contain
+    no Window at all (global scalars come from agg + broadcast) — both
+    previously funneled the whole input through one reducer."""
     p12 = _plan(REGISTRY["q12_surrogate_ids"].spark(spark, SF_DIR))
     assert "rangepartitioning" in p12.lower()
     p14 = _plan(REGISTRY["q14_zscore_outliers"].spark(spark, SF_DIR))
@@ -453,7 +482,7 @@ def test_round5_additions_stay_scale_shaped(spark):
     posting join is a hash join (never cartesian), the AUC/gain-chart
     aggregations are partial before their bounded-domain windows, the
     ABC windows stay brand-partitioned, and the quantile normalizer
-    reuses the range-partitioned two-pass id assigner."""
+    reuses the range-partitioned id assigner."""
     p268 = _plan(REGISTRY["q268_trigram_search"].spark(spark, SF_DIR))
     assert "CartesianProduct" not in p268
     assert "PythonUDF" not in p268
